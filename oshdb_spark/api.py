@@ -40,6 +40,7 @@ from oshdb_spark.filters.dsl import (
     NotOp,
     OrOp,
     TagTranslator,
+    TypeFilter,
     parse_filter,
 )
 from oshdb_spark.geometry.taginterpreter import TagInterpreter
@@ -251,6 +252,16 @@ def _conjuncts(node: Node):
         yield node
 
 
+def _type_only(node: Node) -> bool:
+    """True when ``node`` tests nothing but the entity type, so it holds
+    exactly on the rows of ``node.osm_types()``."""
+    if isinstance(node, TypeFilter):
+        return True
+    if isinstance(node, (AndOp, OrOp)):
+        return _type_only(node.left) and _type_only(node.right)
+    return False
+
+
 def _has_contrib_selector(node: Node) -> bool:
     if isinstance(node, ContributionColFilter):
         return True
@@ -355,8 +366,6 @@ class _MapReducer:
         return self._with(raw_filters=self.state.raw_filters + (f,))
 
     def osm_type(self, *types: str) -> "_MapReducer":
-        from oshdb_spark.filters.dsl import TypeFilter
-
         node = None
         for t in types:
             n = TypeFilter(t)
@@ -470,11 +479,17 @@ class _MapReducer:
 
         from oshdb_spark.filters.dsl import osh_prefilter
 
+        # a type-only conjunct bounds nothing: every prunable type below
+        # lies in the narrowed set, the intersection of every conjunct's
+        # type set, which _entities() has already filtered on
         ub = None
         for n in nodes:
-            c = osh_prefilter(n)
-            if c is not None:
-                ub = c if ub is None else (ub & c)
+            for conj in _conjuncts(n):
+                if _type_only(conj):
+                    continue
+                c = osh_prefilter(conj)
+                if c is not None:
+                    ub = c if ub is None else (ub & c)
         if ub is None:
             return ents
         targets = set(self._type_set())
@@ -840,6 +855,7 @@ class SnapshotView(_MapReducer):
             bbox_deg=self.state.bbox_deg,
             interpreter=self.db.interpreter,
             keep_bbox=self.state.polygon is not None,
+            types=self._type_set(),
         )
         df = self._attach_metric_columns(df)
         # version/geometry predicate on the UNCLIPPED state

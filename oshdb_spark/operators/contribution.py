@@ -269,31 +269,6 @@ def _node_states_direct(nodes: DataFrame, squash: bool = True) -> DataFrame:
     )
 
 
-def _node_states(events: DataFrame, nodes: DataFrame) -> DataFrame:
-    ev = events.filter(F.col("type") == "node").drop("type")
-    st = asof_resolve(ev, nodes.drop("type"), "id", "event_ts")
-    lon_deg = F.col("v_lon").cast("double") / 1e7
-    lat_deg = F.col("v_lat").cast("double") / 1e7
-    return st.select(
-        F.lit("node").alias("type"), "id", "event_ts", "event_changeset",
-        "event_uid", "own_change",
-        F.col("v_doc_id").alias("doc_id"),
-        F.col("v_version").alias("version"),
-        F.col("v_visible").alias("visible"),
-        F.col("v_tags").alias("tags"),
-        node_geometry_cols(
-            F.col("v_lon"), F.col("v_lat"), F.col("v_visible")
-        ).alias("wkt"),
-        F.lit(None).cast("binary").alias("geom"),
-        F.lit(0.0).alias("area"),
-        F.lit(0.0).alias("length"),
-        F.when(F.col("v_visible"), lon_deg).alias("minx"),
-        F.when(F.col("v_visible"), lat_deg).alias("miny"),
-        F.when(F.col("v_visible"), lon_deg).alias("maxx"),
-        F.when(F.col("v_visible"), lat_deg).alias("maxy"),
-    )
-
-
 def _way_states(
     events: DataFrame,
     ways: DataFrame,

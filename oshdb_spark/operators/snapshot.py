@@ -25,6 +25,16 @@ as a DataFrame pipeline:
 
 The timestamp list is driver-side and small (like the reference's
 OSHDBTimestamps); everything else is distributed.
+
+Type narrowing: ``snapshot_view(..., types=T)`` takes the entity-kind set
+a query's filter can reach (the reference narrows each query to the grid
+tables of its DNF type set, MapReducer.java:1910-1935) and plans only
+those branches.  Way lines and the way geometry UDF are built when T holds
+``way`` or ``relation`` (relations resolve way members); the relation
+lines, the eager nested-relation probe, the nesting levels and the
+old-style fix-up only when T holds ``relation``; a node-only view plans
+no Python UDF at all.  So building a node or way snapshot starts no Spark
+job.  The default (all kinds) keeps the full plan.
 """
 
 from __future__ import annotations
@@ -330,84 +340,40 @@ SNAPSHOT_COLUMNS = [
 ]
 
 
-def snapshot_view(
-    entities: DataFrame,
-    timestamps: list[int],
-    bbox_deg: tuple[float, float, float, float] | None = None,
-    interpreter: TagInterpreter | None = None,
-    keep_empty: bool = False,
-    include_old_style_multipolygons: bool = False,
-    keep_bbox: bool = False,
-) -> DataFrame:
-    """The full snapshot view over all three entity kinds.
-
-    ``keep_bbox``: retain the internal minx/miny/maxx/maxy geometry-bbox
-    columns in the output so downstream AOI stages can classify JVM-side
-    (polygon overlap gating) — callers drop them before the public result.
-
-    Returns one row per (entity, snapshot timestamp) where the entity exists,
-    is visible, and (if bbox_deg given) its clipped geometry is non-empty;
-    adds clipped_wkt/clipped_area/clipped_length when clipping.
-
-    ``include_old_style_multipolygons`` (CellIterator.java:102-205
-    constructor flag, :330-380 handling): relations with exactly one
-    outer way and no interesting relation tags emit only their INNER
-    HOLES as geometry (the fix-up applied against the outer way's own
-    result), and their tags are substituted with the outer way's tags so
-    downstream filters test the way, as the reference does.
-    """
-    node_snaps = node_snapshots(entities, timestamps)
-    lon_deg = F.col("lon").cast("double") / 1e7
-    lat_deg = F.col("lat").cast("double") / 1e7
-    nodes_out = node_snaps.filter("visible").select(
+def _packed_out(df: DataFrame) -> DataFrame:
+    """Way/relation rows in the SNAPSHOT_COLUMNS layout from the geometry
+    UDF's struct column ``g`` (packed geometry, null lon/lat/wkt)."""
+    return df.select(
         "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
-        "changeset", "uid", "last_mod_ts", "lon", "lat", "wkt",
-        F.lit(None).cast("binary").alias("geom"),
-        F.lit(0.0).alias("area"), F.lit(0.0).alias("length"),
-        lon_deg.alias("minx"), lat_deg.alias("miny"),
-        lon_deg.alias("maxx"), lat_deg.alias("maxy"),
+        "changeset", "uid", "last_mod_ts",
+        F.lit(None).cast("long").alias("lon"),
+        F.lit(None).cast("long").alias("lat"),
+        F.lit(None).cast("string").alias("wkt"),
+        F.col("g.geom").alias("geom"),
+        F.col("g.area").alias("area"),
+        F.col("g.length").alias("length"),
+        F.col("g.minx").alias("minx"),
+        F.col("g.miny").alias("miny"),
+        F.col("g.maxx").alias("maxx"),
+        F.col("g.maxy").alias("maxy"),
     )
 
-    wl = way_lines(entities, node_snaps, timestamps)
-    wudf = way_geometry_udf(interpreter)
-    ways_out = (
-        wl.filter("visible")
-        .withColumn("g", wudf("visible", "tags", "refs", "line"))
-        .select(
-            "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
-            "changeset", "uid", "last_mod_ts",
-            F.lit(None).cast("long").alias("lon"),
-            F.lit(None).cast("long").alias("lat"),
-            F.lit(None).cast("string").alias("wkt"),
-            F.col("g.geom").alias("geom"),
-            F.col("g.area").alias("area"),
-            F.col("g.length").alias("length"),
-            F.col("g.minx").alias("minx"),
-            F.col("g.miny").alias("miny"),
-            F.col("g.maxx").alias("maxx"),
-            F.col("g.maxy").alias("maxy"),
-        )
-    )
 
+def _relation_snapshots(
+    entities: DataFrame,
+    wl: DataFrame,
+    node_snaps: DataFrame,
+    timestamps: list[int],
+    interpreter: TagInterpreter | None,
+    include_old_style_multipolygons: bool,
+) -> DataFrame:
+    """Relation output rows (packed geometry) of :func:`snapshot_view`."""
     rudf = relation_geometry_udf(interpreter)
 
     def _build_rels(rl_df: DataFrame) -> DataFrame:
-        return (
-            rl_df.filter("visible")
-            .withColumn("g", rudf("visible", "tags", "members"))
-            .select(
-                "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
-                "changeset", "uid", "last_mod_ts",
-                F.lit(None).cast("long").alias("lon"),
-                F.lit(None).cast("long").alias("lat"),
-                F.lit(None).cast("string").alias("wkt"),
-                F.col("g.geom").alias("geom"),
-                F.col("g.area").alias("area"),
-                F.col("g.length").alias("length"),
-                F.col("g.minx").alias("minx"),
-                F.col("g.miny").alias("miny"),
-                F.col("g.maxx").alias("maxx"),
-                F.col("g.maxy").alias("maxy"),
+        return _packed_out(
+            rl_df.filter("visible").withColumn(
+                "g", rudf("visible", "tags", "members")
             )
         )
 
@@ -452,56 +418,139 @@ def snapshot_view(
             # same stage-boundary discipline as plans/lineage)
             acc = rels_out.localCheckpoint() if k >= 2 else rels_out
 
-    if include_old_style_multipolygons:
-        from oshdb_spark.operators.geometry_ops import (
-            holes_only_udf,
-            old_style_flag_udf,
-        )
+    if not include_old_style_multipolygons:
+        return rels_out
+    from oshdb_spark.operators.geometry_ops import (
+        holes_only_udf,
+        old_style_flag_udf,
+    )
 
-        flag = old_style_flag_udf(interpreter)
-        outer_ref = F.filter(
-            F.col("members"),
-            lambda m: (m["mtype"] == F.lit("way")) & (m["role"] == F.lit("outer")),
-        )[0]["ref"]
-        flagged = (
-            rl.filter("visible")
-            .withColumn("__old", flag("tags", "members"))
-            .filter("__old")
-            .select("type", "id", "version", "snap_ts",
-                    outer_ref.alias("__outer_ref"))
+    flag = old_style_flag_udf(interpreter)
+    outer_ref = F.filter(
+        F.col("members"),
+        lambda m: (m["mtype"] == F.lit("way")) & (m["role"] == F.lit("outer")),
+    )[0]["ref"]
+    flagged = (
+        rl.filter("visible")
+        .withColumn("__old", flag("tags", "members"))
+        .filter("__old")
+        .select("type", "id", "version", "snap_ts",
+                outer_ref.alias("__outer_ref"))
+    )
+    way_tags = wl.select(
+        F.col("id").alias("__outer_ref"),
+        "snap_ts",
+        F.col("tags").alias("__way_tags"),
+    )
+    flagged = flagged.join(way_tags, ["__outer_ref", "snap_ts"], "left")
+    rels_out = rels_out.join(
+        flagged, ["type", "id", "version", "snap_ts"], "left"
+    )
+    hu = holes_only_udf()
+    is_old = F.col("__outer_ref").isNotNull()
+    return (
+        rels_out.withColumn(
+            "__h", F.when(is_old, hu(F.col("geom")))
         )
-        way_tags = wl.select(
-            F.col("id").alias("__outer_ref"),
-            "snap_ts",
-            F.col("tags").alias("__way_tags"),
+        .withColumn("geom", F.when(is_old, F.col("__h.geom")).otherwise(F.col("geom")))
+        .withColumn("area", F.when(is_old, F.col("__h.area")).otherwise(F.col("area")))
+        .withColumn(
+            "length", F.when(is_old, F.col("__h.length")).otherwise(F.col("length"))
         )
-        flagged = flagged.join(way_tags, ["__outer_ref", "snap_ts"], "left")
-        rels_out = rels_out.join(
-            flagged, ["type", "id", "version", "snap_ts"], "left"
+        .withColumn(
+            "tags",
+            F.when(is_old, F.coalesce(F.col("__way_tags"), F.col("tags")))
+            .otherwise(F.col("tags")),
         )
-        hu = holes_only_udf()
-        is_old = F.col("__outer_ref").isNotNull()
-        rels_out = (
-            rels_out.withColumn(
-                "__h", F.when(is_old, hu(F.col("geom")))
-            )
-            .withColumn("geom", F.when(is_old, F.col("__h.geom")).otherwise(F.col("geom")))
-            .withColumn("area", F.when(is_old, F.col("__h.area")).otherwise(F.col("area")))
-            .withColumn(
-                "length", F.when(is_old, F.col("__h.length")).otherwise(F.col("length"))
-            )
-            .withColumn(
-                "tags",
-                F.when(is_old, F.coalesce(F.col("__way_tags"), F.col("tags")))
-                .otherwise(F.col("tags")),
-            )
-            .drop("__h", "__outer_ref", "__way_tags", "__old")
-        )
+        .drop("__h", "__outer_ref", "__way_tags", "__old")
+    )
 
-    out = nodes_out.unionByName(ways_out).unionByName(rels_out)
+
+def snapshot_view(
+    entities: DataFrame,
+    timestamps: list[int],
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    interpreter: TagInterpreter | None = None,
+    keep_empty: bool = False,
+    include_old_style_multipolygons: bool = False,
+    keep_bbox: bool = False,
+    types: set[str] | frozenset[str] | None = None,
+) -> DataFrame:
+    """The snapshot view over the entity kinds in ``types``.
+
+    ``keep_bbox``: retain the internal minx/miny/maxx/maxy geometry-bbox
+    columns in the output so downstream AOI stages can classify JVM-side
+    (polygon overlap gating) — callers drop them before the public result.
+
+    Returns one row per (entity, snapshot timestamp) where the entity exists,
+    is visible, and (if bbox_deg given) its clipped geometry is non-empty;
+    adds clipped_wkt/clipped_area/clipped_length when clipping.
+
+    ``include_old_style_multipolygons`` (CellIterator.java:102-205
+    constructor flag, :330-380 handling): relations with exactly one
+    outer way and no interesting relation tags emit only their INNER
+    HOLES as geometry (the fix-up applied against the outer way's own
+    result), and their tags are substituted with the outer way's tags so
+    downstream filters test the way, as the reference does.
+
+    ``types`` is the narrowed entity-kind set (the reference's DNF type
+    narrowing, MapReducer.java:1910-1935); None means all three kinds.
+    Only rows of these kinds are emitted, and the plan holds only the
+    branches they reach:
+
+    - the way lines and the way geometry UDF are built only when ``way``
+      or ``relation`` is in the set (relations resolve way members);
+    - the relation lines, the nested-relation probe (the one eager job of
+      this function), the nesting levels and the old-style fix-up only
+      when ``relation`` is in the set;
+    - with neither ``way`` nor ``relation``, the clip and WKT stages are
+      Column expressions only: nodes are never border rows and their WKT
+      is built in the JVM, so no Python UDF is planned;
+    - the empty set gives an empty frame with the full schema.
+
+    The result equals the all-types result filtered to ``type in types``.
+    """
+    types = frozenset({"node", "way", "relation"} if types is None else types)
+    packed_kinds = bool(types & {"way", "relation"})
+    node_snaps = node_snapshots(entities, timestamps)
+    lon_deg = F.col("lon").cast("double") / 1e7
+    lat_deg = F.col("lat").cast("double") / 1e7
+    nodes_out = node_snaps.filter("visible").select(
+        "doc_id", "type", "id", "version", "snap_ts", "visible", "tags",
+        "changeset", "uid", "last_mod_ts", "lon", "lat", "wkt",
+        F.lit(None).cast("binary").alias("geom"),
+        F.lit(0.0).alias("area"), F.lit(0.0).alias("length"),
+        lon_deg.alias("minx"), lat_deg.alias("miny"),
+        lon_deg.alias("maxx"), lat_deg.alias("maxy"),
+    )
+
+    parts = [nodes_out] if "node" in types else []
+    if packed_kinds:
+        wl = way_lines(entities, node_snaps, timestamps)
+        if "way" in types:
+            wudf = way_geometry_udf(interpreter)
+            parts.append(
+                _packed_out(
+                    wl.filter("visible").withColumn(
+                        "g", wudf("visible", "tags", "refs", "line")
+                    )
+                )
+            )
+        if "relation" in types:
+            parts.append(
+                _relation_snapshots(
+                    entities, wl, node_snaps, timestamps, interpreter,
+                    include_old_style_multipolygons,
+                )
+            )
+    if not parts:
+        # contradictory filter: optimized to an empty local relation
+        parts = [nodes_out.filter(F.lit(False))]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
     if not keep_empty:
         out = out.filter(~is_empty_geom_cols(F.col("geom"), F.col("wkt")))
-    wudf_wkt = to_wkt_udf()
     if bbox_deg is not None:
         # JVM-side classification against the geometry bbox columns
         # (CellIterator.java:417-459 short-circuits, columnar): fully
@@ -512,7 +561,8 @@ def snapshot_view(
         # UDFs are evaluated exactly once per row — no filter/union triple
         # scan that could re-execute the build subtree per branch.  Border
         # rows are always ways/relations (a node's degenerate bbox is never
-        # border), so gating on `geom` loses nothing.
+        # border), so gating on `geom` loses nothing, and a node-only view
+        # plans no clip UDF at all.
         minx, miny, maxx, maxy = (float(v) for v in bbox_deg)
         has_b = F.col("minx").isNotNull()
         inside = (
@@ -532,26 +582,33 @@ def snapshot_view(
         empty_wkt = F.concat(
             F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
         )
-        out = (
-            out.withColumn(
+        if packed_kinds:
+            out = out.withColumn(
                 "c", clip_udf(bbox_deg)(F.when(border, F.col("geom")))
             )
-            .select(
+            c_geom = F.col("c.clipped_geom")
+            c_area = F.col("c.clipped_area")
+            c_length = F.col("c.clipped_length")
+        else:
+            c_geom = F.lit(None).cast("binary")
+            c_area = c_length = F.lit(None).cast("double")
+        out = (
+            out.select(
                 "*",
                 F.when(~has_b | inside, F.col("geom"))
                 .when(outside, empty_geom)
-                .otherwise(F.col("c.clipped_geom"))
+                .otherwise(c_geom)
                 .alias("clipped_geom"),
                 F.when(F.col("geom").isNull() & (~has_b | inside), F.col("wkt"))
                 .when(F.col("geom").isNull() & outside, empty_wkt)
                 .alias("clipped_wkt"),
                 F.when(~has_b | inside, F.col("area"))
                 .when(outside, F.lit(0.0))
-                .otherwise(F.col("c.clipped_area"))
+                .otherwise(c_area)
                 .alias("clipped_area"),
                 F.when(~has_b | inside, F.col("length"))
                 .when(outside, F.lit(0.0))
-                .otherwise(F.col("c.clipped_length"))
+                .otherwise(c_length)
                 .alias("clipped_length"),
             )
             .drop("c")
@@ -560,23 +617,23 @@ def snapshot_view(
             out = out.filter(
                 ~is_empty_geom_cols(F.col("clipped_geom"), F.col("clipped_wkt"))
             )
+    if packed_kinds:
         # output boundary: packed -> WKT exactly once, for surviving rows
         # only; identity-clipped rows reuse the unclipped string (binary
-        # equality is a JVM compare)
-        out = out.withColumn(
-            "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
-        ).withColumn(
-            "clipped_wkt",
-            F.coalesce(
-                F.col("clipped_wkt"),
-                F.when(F.col("clipped_geom") == F.col("geom"), F.col("wkt")),
-                wudf_wkt(F.col("clipped_geom")),
-            ),
-        )
-    else:
+        # equality is a JVM compare).  Node rows already carry both.
+        wudf_wkt = to_wkt_udf()
         out = out.withColumn(
             "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
         )
+        if bbox_deg is not None:
+            out = out.withColumn(
+                "clipped_wkt",
+                F.coalesce(
+                    F.col("clipped_wkt"),
+                    F.when(F.col("clipped_geom") == F.col("geom"), F.col("wkt")),
+                    wudf_wkt(F.col("clipped_geom")),
+                ),
+            )
     if not keep_bbox:
         out = out.drop("minx", "miny", "maxx", "maxy")
     return out

@@ -24,13 +24,18 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def load_runs() -> list[dict]:
-    runs = []
-    for f in sorted(glob.glob(os.path.join(HERE, "gate_run_*.json"))):
+def load_runs(directory: str = HERE) -> tuple[list[dict], list[str]]:
+    """(runs, skipped): one row per readable run file, and the names of the
+    files that could not be read or parsed (each reported on stderr)."""
+    runs, skipped = [], []
+    for f in sorted(glob.glob(os.path.join(directory, "gate_run_*.json"))):
         try:
             with open(f) as fh:
                 d = json.load(fh)
-        except (OSError, json.JSONDecodeError):
+        except (OSError, json.JSONDecodeError) as e:
+            name = os.path.basename(f)
+            print(f"gate_summary: skipped {name}: {e}", file=sys.stderr)
+            skipped.append(name)
             continue
         wl = d.get("workloads", {})
         join = wl.get("join", {})
@@ -50,10 +55,10 @@ def load_runs() -> list[dict]:
                 "gate": d.get("gate", 0.8),
             }
         )
-    return runs
+    return runs, skipped
 
 
-def summarize(runs: list[dict]) -> dict:
+def summarize(runs: list[dict], skipped: list[str] = ()) -> dict:
     gate = runs[0]["gate"] if runs else 0.8
     stable = [r for r in runs if r["host_stable"] is not False
               and r["verdict"] != "contaminated"]
@@ -70,6 +75,8 @@ def summarize(runs: list[dict]) -> dict:
         "metric": "executor_scaling_gate_record",
         "gate": gate,
         "n_runs_stored": len(runs),
+        "n_skipped": len(skipped),
+        "skipped_files": list(skipped),
         "n_host_stable": len(stable),
         "n_unstable_host": len(unstable),
         "join": {
@@ -127,11 +134,16 @@ def to_markdown(s: dict) -> str:
         f"{len(j['stable_run_effs'])} runs (pass rate {j['stable_pass_rate']}); "
         f"{s['assign']['median']} assign median."
     )
+    if s["n_skipped"]:
+        lines.append(
+            f"Skipped {s['n_skipped']} unreadable run file(s): "
+            + ", ".join(s["skipped_files"])
+        )
     return "\n".join(lines)
 
 
 def main() -> None:
-    s = summarize(load_runs())
+    s = summarize(*load_runs())
     if "--markdown" in sys.argv:
         print(to_markdown(s))
     else:

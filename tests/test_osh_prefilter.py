@@ -92,6 +92,19 @@ def test_prune_drops_never_matching_entities(db):
     assert unpruned.count() == len(ROWS)
 
 
+def test_type_only_conjuncts_add_no_prefilter(db):
+    # `type:node` only restates the narrowed type set: no window at all
+    v = SnapshotView.on(db).timestamps([_t("2011-01-01")]).filter("type:node")
+    ents = v._entities()
+    assert v._osh_prefilter(ents, v.state.filters) is ents
+    # a tag conjunct beside it still prunes, as with osm_type() + filter()
+    v2 = (SnapshotView.on(db)
+          .timestamps([_t("2011-01-01")])
+          .filter("type:node and shop=supermarket"))
+    pruned = v2._osh_prefilter(v2._entities(), v2.state.filters)
+    assert sorted(r.id for r in pruned.select("id").distinct().collect()) == [1]
+
+
 def test_filtered_contribution_deletion_survives_prune(db):
     rows = (
         ContributionView.on(db)

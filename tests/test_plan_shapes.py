@@ -7,6 +7,7 @@ no extra Exchange beyond its group-by)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oshdb_spark.operators.aggregations import (
@@ -135,3 +136,71 @@ def test_spacetime_k_single_aggregate_no_extra_shuffle(spark):
     # (two sides of one SortMergeJoin/ShuffledHashJoin) + one 1-row agg
     assert plan.count("FlatMapGroupsInPandas") == 0
     assert _no_python(plan)
+
+
+# ---------------------------------------------------------------------------
+# type-narrowed snapshot plans: a SnapshotView plans only the entity
+# branches its filter's type set reaches, and starts no job while built
+# ---------------------------------------------------------------------------
+
+SNAP_TS = [1262304000 + k * 2 * 365 * 86400 for k in range(6)]
+SNAP_BOX = (-20.0, -20.0, 40.0, 40.0)
+
+
+@pytest.fixture(scope="module")
+def docs_db(spark, docs_parquet):
+    from oshdb_spark.api import OSHDB
+    from oshdb_spark.filters.dsl import TagTranslator
+
+    tr = TagTranslator(keys={"building": 2}, values={})
+    return OSHDB.from_docs(spark, spark.read.parquet(docs_parquet[0]), translator=tr)
+
+
+def _snapshot(db, filt: str, bbox=SNAP_BOX):
+    from oshdb_spark.api import SnapshotView
+
+    v = SnapshotView.on(db).timestamps(SNAP_TS).filter(filt)
+    return v.area_of_interest(bbox=bbox) if bbox is not None else v
+
+
+def test_node_snapshot_bbox_plan_is_jvm_only(docs_db):
+    view = _snapshot(docs_db, "type:node")
+    for df, exchanges in (
+        # the (type, id) validity window
+        (view.dataframe(), 1),
+        # + the aggregation, the zerofill join and the ordering
+        (view.aggregate_by_timestamp().count(), 4),
+    ):
+        plan = _plan(df)
+        assert _no_python(plan), plan[:3000]
+        assert plan.count("Exchange") == exchanges, plan[:3000]
+        # `type:node` only restates the type set: no OSH-prefilter window
+        assert "Window [max(" not in plan, plan[:3000]
+
+
+def test_way_snapshot_plan_has_no_relation_geometry(docs_db):
+    plan = _plan(
+        _snapshot(docs_db, "type:way and building=*")
+        .aggregate_by_timestamp()
+        .count()
+    )
+    python_nodes = [l for l in plan.splitlines() if "EvalPython" in l]
+    # the way geometry UDF (refs + resolved line) is planned ...
+    assert any("refs#" in l for l in python_nodes), plan[:3000]
+    # ... the relation geometry UDF (members) is not
+    assert not any("members#" in l for l in python_nodes), plan[:3000]
+
+
+@pytest.mark.parametrize("filt", ["type:node", "type:way and building=*"])
+def test_snapshot_build_starts_no_job(spark, docs_db, filt):
+    sc = spark.sparkContext
+    group = f"plan-shape-build-{filt}"
+    sc.setJobGroup(group, "snapshot DataFrame build")
+    try:
+        _snapshot(docs_db, filt).aggregate_by_timestamp().count()
+        _snapshot(docs_db, filt, bbox=None).aggregate_by_timestamp().count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []

@@ -64,8 +64,12 @@ def _submit(pyfiles_zip, docs, out, tmp):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     # the report is the last JSON line on stdout (Spark noise is stderr)
-    line = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    lines = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")]
+    assert lines, (
+        f"no JSON report line\nstdout tail:\n{proc.stdout[-2000:]}"
+        f"\nstderr tail:\n{proc.stderr[-2000:]}"
+    )
+    return json.loads(lines[-1])
 
 
 def test_pyfiles_launch_and_resume(pyfiles_zip, tmp_path):
