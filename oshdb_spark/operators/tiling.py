@@ -1,20 +1,20 @@
 """Tile assignment + query-side cell pruning (the engine's stage 1).
 
-Two implementations of the same XYGrid semantics, cross-checked in tests:
+Insert cells come from one kernel: ``xy_insert_cell_udf`` / ``quadcell_udf``
+are Arrow-batched pandas UDFs wrapping the numpy kernels (grid/xygrid.py,
+grid/quadcell.py) — the north-rule path ("H3/S2 tiling via batched
+vectorized pandas/Arrow UDFs, no per-row Python").  Every engine caller
+(``assign_cells``, the throughput pipelines) uses it.  If the ``h3``
+package is importable, ``h3_udf`` emits true H3 ids as well.
 
-  * ``xy_cell_id_col`` / ``xy_insert_cell_col`` — pure Catalyst Column
-    expressions (whole-stage-codegen'd, JVM-side; the hot path).  The XYGrid
-    arithmetic is plain fixed-point shifts + double division + floor, so it
-    needs no Python at all; Java's ``(int)`` casts truncate toward zero, and
-    after the +180/+90 shift every operand is non-negative, so FLOOR ==
-    truncation and the results are bit-identical to the reference
-    (XYGrid.java:140-168, :229-236; XYGridTree.java:93-100).
-
-  * ``xy_insert_cell_udf`` / ``quadcell_udf`` — Arrow-batched pandas UDFs
-    wrapping the numpy kernels (grid/xygrid.py, grid/quadcell.py): the
-    north-rule path ("H3/S2 tiling via batched vectorized pandas/Arrow UDFs,
-    no per-row Python").  If the ``h3`` package is importable, ``h3_udf``
-    emits true H3 ids as well.
+``xy_cell_id_col`` / ``xy_insert_cell_col`` are the same XYGrid semantics
+as pure Catalyst Column expressions.  ``xy_cell_id_col`` serves JVM-side
+per-point cell ids; ``xy_insert_cell_col`` is kept only as the reference
+the kernel is tested against.  The XYGrid arithmetic is plain fixed-point
+shifts + double division + floor; Java's ``(int)`` casts truncate toward
+zero, and after the +180/+90 shift every operand is non-negative, so
+FLOOR == truncation and the results are bit-identical to the reference
+(XYGrid.java:140-168, :229-236; XYGridTree.java:93-100).
 
 Query side: ``query_cell_ranges`` computes per-zoom cell-id ranges for a
 bbox on the driver (with the reference's enlarge-one-cell-SW rule,
@@ -69,7 +69,8 @@ def xy_insert_cell_col(
     minlon: Column, minlat: Column, maxlon: Column, maxlat: Column,
     maxzoom: int = MAXZOOM,
 ) -> Column:
-    """XYGridTree.getInsertId as one Catalyst expression.
+    """XYGridTree.getInsertId as one Catalyst expression — the reference
+    ``xy_insert_cell_udf`` is tested against (no engine caller).
 
     Returns struct(cell_zoom int, cell_id long, level_id long): the deepest
     zoom whose estimated cell count for the bbox is <= 2 (XYGridTree.java:93-100),
@@ -282,7 +283,7 @@ def h3_udf(resolution: int, prefer_library: bool = True):
 # ---------------------------------------------------------------------------
 
 
-def lifetime_bboxes(entities: DataFrame, materialize: bool = True) -> DataFrame:
+def lifetime_bboxes(entities: DataFrame) -> DataFrame:
     """Per (type, id): bbox over ALL versions, members included.
 
     Mirrors the reference's insert rule, which tiles each OSH entity by its
@@ -300,12 +301,13 @@ def lifetime_bboxes(entities: DataFrame, materialize: bool = True) -> DataFrame:
 
     The edge list is built in ONE pass over `entities` (a single per-row
     CASE emits way refs, relation node-members, and relation way-members
-    into one struct array) and, with `materialize`, persisted
-    MEMORY_AND_DISK before the branches that consume it.  Without this the
-    four consuming subtrees each re-run the upstream payload parse — on the
-    docs source that is 4-5 full JSON parses of the input instead of one.
-    In production the same boundary is the narrow entity-projection ETL
-    table; pass materialize=False when `entities` is already materialized.
+    into one struct array) and, unless `entities` is already cached,
+    persisted MEMORY_AND_DISK before the branches that consume it.  Without
+    this the four consuming subtrees each re-run the upstream payload
+    parse — on the docs source that is 4-5 full JSON parses of the input
+    instead of one.  That persisted edge list outlives the call; a caller
+    that must release its cache (the store ETL) caches `entities` itself
+    and unpersists it afterwards.
 
     Shuffle width: 1e-7 fixed-point coordinates span ±1.8e9, which fits
     int32, so every shuffled bbox value travels as an int (half the bytes
@@ -346,7 +348,7 @@ def lifetime_bboxes(entities: DataFrame, materialize: bool = True) -> DataFrame:
         )
         .alias("edges"),
     )
-    if materialize:
+    if not entities.is_cached:
         from pyspark import StorageLevel
 
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
@@ -418,49 +420,31 @@ def lifetime_bboxes(entities: DataFrame, materialize: bool = True) -> DataFrame:
     )
 
 
-def assign_cells(
-    entities: DataFrame,
-    quadcell_level: int = 12,
-    use_udf_path: bool = False,
-) -> DataFrame:
+def assign_cells(entities: DataFrame, quadcell_level: int = 12) -> DataFrame:
     """entities + (cell_zoom, cell_id, level_id, qcell) columns.
 
-    qcell is the hierarchical quadcell of the lifetime-bbox SW corner at
-    `quadcell_level` (computed via the Arrow pandas UDF — the north-rule
-    path); the XYGrid insert cell uses the JVM Column expression unless
-    `use_udf_path` (both are bit-identical; tests assert it).
+    Both cells come from the lifetime bbox through the Arrow kernels in one
+    projection: the XYGrid insert cell (``xy_insert_cell_udf``, with the
+    packed level id of CellId.java:37-39) and the hierarchical quadcell of
+    the bbox SW corner at `quadcell_level`.  Spark evaluates the two UDFs
+    in one ArrowEvalPython node per union branch of the lifetime bboxes.
     """
-    boxes = lifetime_bboxes(entities)
-    if use_udf_path:
-        udf = xy_insert_cell_udf()
-        boxes = boxes.withColumn(
-            "c", udf("minlon", "minlat", "maxlon", "maxlat")
-        ).withColumn(
-            "c",
-            F.struct(
-                F.col("c.cell_zoom"),
-                F.col("c.cell_id"),
-                (
-                    F.col("c.cell_zoom").cast("long") * F.lit(1 << 56).cast("long")
-                    + F.col("c.cell_id")
-                ).alias("level_id"),
-            ),
-        )
-    else:
-        boxes = boxes.withColumn(
-            "c",
-            xy_insert_cell_col(
-                F.col("minlon"), F.col("minlat"), F.col("maxlon"), F.col("maxlat")
-            ),
-        )
-    qudf = quadcell_udf(quadcell_level)
+    boxes = lifetime_bboxes(entities).select(
+        "type",
+        "id",
+        xy_insert_cell_udf()("minlon", "minlat", "maxlon", "maxlat").alias("c"),
+        quadcell_udf(quadcell_level)("minlon", "minlat").alias("qcell"),
+    )
     boxes = boxes.select(
         "type",
         "id",
         F.col("c.cell_zoom").alias("cell_zoom"),
         F.col("c.cell_id").alias("cell_id"),
-        F.col("c.level_id").alias("level_id"),
-        qudf("minlon", "minlat").alias("qcell"),
+        (
+            F.col("c.cell_zoom").cast("long") * F.lit(1 << 56)
+            + F.col("c.cell_id")
+        ).alias("level_id"),
+        "qcell",
     )
     return entities.join(boxes, ["type", "id"], "left")
 

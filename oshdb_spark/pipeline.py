@@ -1,22 +1,12 @@
-"""The north-rule headline pipeline, end to end:
+"""The north-rule throughput pipelines over the interleaved docs table
+(doc_id, spans): vectorized entity extraction (JVM expressions only) ->
+tile assignment through the Arrow insert-cell kernel -> cell-cover filter
+-> exact refinement -> per-cell aggregation.  ``bench.py`` and perfbench's
+``tile_join`` workload time them.
 
-    interleaved docs table (doc_id, spans)
-      -> stage 1: vectorized entity extraction (JVM expressions only)
-      -> stage 2: tile assignment (XYGrid insert rule + quadcell column)
-      -> stage 3: spatial pruning for the query AOI (cell-range predicate
-                  at all zoom levels -> parquet/Iceberg partition pruning)
-                  + member-closure repair (ways/relations keep their member
-                  nodes even when those live in out-of-range cells — the
-                  reference gets this by co-storing member histories in the
-                  OSH blob; we re-derive it with id semi-joins)
-      -> stage 4: snapshot temporal view + geometry build + bbox clip
-                  (the per-tile point-in-polygon / clip refinement)
-      -> stage 5: aggregation (count per cell per timestamp)
-      -> optional: resumable bucketed write with per-partition lineage
-                  (plans/lineage.py)
-
-Every surviving row joins back to its source doc; ``verify_spans``
-asserts the span-sequence equality invariant (BASELINE.json:15).
+The AOI snapshot query over docs — the spark-submit entry
+``scripts/run_pipeline.py`` — goes through the public API instead
+(``api.SnapshotView`` on ``api.OSHDB.from_docs``), the one AOI query path.
 
 Reference lifecycle being reproduced: MapReducerJdbc cell-range scan ->
 CellIterator.iterateByTimestamps -> Kernels fold (SURVEY.md §3 entry A).
@@ -24,68 +14,12 @@ CellIterator.iterateByTimestamps -> Kernels fold (SURVEY.md §3 entry A).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oshdb_spark.operators.snapshot import snapshot_view
-from oshdb_spark.operators.tiling import (
-    assign_cells,
-    cell_rect_filter,
-    xy_cell_id_col,
-)
-from oshdb_spark.sources.entities import extract_entities, verify_span_equality
-
-
-def prune_with_members(tiled: DataFrame, range_pred) -> DataFrame:
-    """Cell-range pruning that keeps member closure.
-
-    In-range ways/relations may reference nodes (and ways) whose own insert
-    cells are out of range; two id semi-joins pull exactly those back in.
-
-    The semi-join sides are NOT hint-broadcast: the key sets scale with the
-    AOI (a continental query's distinct ref set is billions of ids — a
-    forced broadcast would OOM the driver).  With AQE on (session.py) the
-    runtime re-plan broadcasts them whenever they measure small — the
-    common city/region AOI gets the broadcast semi-join for free, the
-    continental AOI degrades to a shuffled semi-join instead of dying.
-    """
-    in_range = tiled.filter(range_pred)
-    ways_in = in_range.filter(F.col("type") == "way")
-    rels_in = in_range.filter(F.col("type") == "relation")
-
-    # relations also need their member WAYS (then those ways' nodes)
-    rel_way_ids = (
-        rels_in.select(F.explode("members").alias("m"))
-        .filter(F.col("m.type") == "way")
-        .select(F.col("m.ref").alias("id"))
-        .distinct()
-    )
-    extra_ways = tiled.filter(F.col("type") == "way").join(
-        rel_way_ids, "id", "left_semi"
-    )
-    all_ways = ways_in.unionByName(extra_ways).dropDuplicates(["id", "version"])
-
-    node_ids = (
-        all_ways.select(F.explode("refs").alias("id"))
-        .unionByName(
-            rels_in.select(F.explode("members").alias("m"))
-            .filter(F.col("m.type") == "node")
-            .select(F.col("m.ref").alias("id"))
-        )
-        .distinct()
-    )
-    extra_nodes = tiled.filter(F.col("type") == "node").join(
-        node_ids, "id", "left_semi"
-    )
-    nodes = (
-        in_range.filter(F.col("type") == "node")
-        .unionByName(extra_nodes)
-        .dropDuplicates(["id", "version"])
-    )
-    return nodes.unionByName(all_ways).unionByName(rels_in)
+from oshdb_spark.operators.tiling import cell_rect_filter
+from oshdb_spark.sources.entities import extract_entities
 
 
 def tile_assign_throughput(
@@ -189,93 +123,4 @@ def tile_join_throughput(
         )
     return refined.groupBy("cell_zoom", "type").agg(
         F.count(F.lit(1)).alias("n_entities")
-    )
-
-
-@dataclass
-class PipelineResult:
-    snapshots: DataFrame  # surviving (entity, snap_ts) rows w/ clipped geometry
-    aggregated: DataFrame  # (cell_id, snap_ts, cnt)
-    docs: DataFrame  # the source (for span verification)
-
-
-def spatial_join_pipeline(
-    spark: SparkSession,
-    docs: DataFrame,
-    bbox_deg: tuple[float, float, float, float],
-    timestamps: list[int],
-    agg_zoom: int = 12,
-) -> PipelineResult:
-    """docs + AOI + timestamps -> per-cell per-timestamp feature counts."""
-    minx, miny, maxx, maxy = bbox_deg
-    bbox_osm = (
-        int(round(minx * 1e7)),
-        int(round(miny * 1e7)),
-        int(round(maxx * 1e7)),
-        int(round(maxy * 1e7)),
-    )
-    # Stage boundaries are CHECKPOINTED (plan truncation, not just data
-    # caching): tiled/pruned are each referenced by several downstream
-    # branches, and with plain persist() Catalyst still re-optimizes the
-    # full upstream logical tree per action — on the deep union/semi-join
-    # DAG here that made driver-side planning, not execution, the
-    # bottleneck.  localCheckpoint materializes AND truncates lineage.
-    # In production each boundary is the lineage-tracked bucketed write
-    # (plans/lineage.py) — same effect, resumable and executor-loss-safe;
-    # tiling in particular is the ETL output table (partitioned by cell).
-    entities = extract_entities(docs)
-    # Arrow-UDF tiling path: one vectorized numpy pass; the all-Column CASE
-    # variant is bit-identical (tests assert it) but codegens a huge method
-    # that measures ~2x slower end-to-end
-    tiled = assign_cells(entities, use_udf_path=True).localCheckpoint()
-    pred = cell_rect_filter(bbox_osm)
-    pruned = prune_with_members(tiled, pred).localCheckpoint()
-    snaps = snapshot_view(pruned, timestamps, bbox_deg=bbox_deg).localCheckpoint()
-    # per-tile aggregation at the analysis zoom; ways/relations aggregate
-    # by their stored cell, nodes by position
-    cell = F.when(
-        F.col("lon").isNotNull(),
-        xy_cell_id_col(agg_zoom, F.col("lon"), F.col("lat")),
-    ).otherwise(F.col("cell_id"))
-    snaps_cells = snaps.join(
-        tiled.select("type", "id", "version", "cell_id").dropDuplicates(
-            ["type", "id", "version"]
-        ),
-        ["type", "id", "version"],
-        "left",
-    )
-    agged = (
-        snaps_cells.withColumn("agg_cell", cell)
-        .groupBy("agg_cell", "snap_ts")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return PipelineResult(snapshots=snaps, aggregated=agged, docs=docs)
-
-
-def verify_spans(result: PipelineResult) -> int:
-    """0 == every surviving row's doc still has a byte-identical span
-    sequence (the north-rule per-row invariant)."""
-    return verify_span_equality(result.docs, result.snapshots)
-
-
-def write_resumable(
-    result: PipelineResult, out_dir: str, n_buckets: int = 8
-) -> list:
-    """Bucketed, lineage-tracked, resumable write of the snapshot rows.
-
-    The snapshots DataFrame is localCheckpoint'd (run-specific RDD leaves),
-    so its own plan is not a stable identity; the fingerprint is derived
-    from the TRUE source — the docs table's file listing + sizes/mtimes —
-    which is what resumability must key on.
-    """
-    from oshdb_spark.plans.lineage import input_fingerprint, run_partitioned
-
-    return run_partitioned(
-        result.snapshots.withColumn(
-            "__key", F.concat_ws("/", "type", F.col("id").cast("string"))
-        ),
-        out_dir,
-        bucket_key="__key",
-        n_buckets=n_buckets,
-        fingerprint=input_fingerprint(result.docs),
     )

@@ -76,21 +76,36 @@ def write_entities_table(
     write.target-file-size behavior — which is what makes the manifest's
     file-level pruning effective: without the split a bucket is one file
     spanning every zoom and nothing can be skipped.
+
+    Unless the caller already cached `entities`, it is cached for the
+    write (one payload parse feeds every tiling branch) and released once
+    the write and the manifest are done, so the ETL leaves no cached data
+    behind in the session.
     """
-    tiled = assign_cells(entities)
-    w = (
-        tiled.withColumn(
-            "pt", F.pmod(F.xxhash64(F.col("cell_id")), F.lit(n_buckets)).cast("int")
+    from pyspark import StorageLevel
+
+    owned = not entities.is_cached
+    if owned:
+        entities = entities.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        w = (
+            assign_cells(entities)
+            .withColumn(
+                "pt",
+                F.pmod(F.xxhash64(F.col("cell_id")), F.lit(n_buckets)).cast("int"),
+            )
+            .repartition("pt")
+            .sortWithinPartitions("cell_zoom", "cell_id")
+            .write.mode(mode)
         )
-        .repartition("pt")
-        .sortWithinPartitions("cell_zoom", "cell_id")
-        .write.mode(mode)
-    )
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    w.partitionBy("pt").parquet(path)
-    if manifest:
-        write_manifest(path)
+        if max_records_per_file:
+            w = w.option("maxRecordsPerFile", int(max_records_per_file))
+        w.partitionBy("pt").parquet(path)
+        if manifest:
+            write_manifest(path)
+    finally:
+        if owned:
+            entities.unpersist()
 
 
 def write_manifest(path: str) -> int:

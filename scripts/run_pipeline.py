@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""spark-submit entry point for the north-rule headline pipeline.
+"""spark-submit entry point for the AOI snapshot pipeline over a docs table.
 
     spark-submit [--master ...] --py-files dist/oshdb_spark.zip \
       scripts/run_pipeline.py --docs <parquet-or-iceberg-table> \
@@ -7,9 +7,11 @@
       --timestamps t1,t2,... (epoch seconds or micros) \
       --out <dir> [--buckets 64]
 
-Runs: extract -> tile -> prune -> snapshot+clip -> aggregate, verifies the
-span-sequence invariant, writes the result resumably (per-partition lineage
-manifests under <out>/_lineage), and prints a one-line JSON report.
+Runs the AOI snapshot query through the public API (``SnapshotView`` on
+``OSHDB.from_docs``: extract -> snapshot + bbox clip), verifies the
+span-sequence invariant on every run, writes the rows resumably
+(per-partition lineage manifests under <out>/_lineage), and prints a
+one-line JSON report.
 Re-running the same command after a failure resumes from the last committed
 bucket.
 """
@@ -29,25 +31,42 @@ def main() -> None:
     ap.add_argument("--timestamps", required=True, help="comma-separated epoch ts")
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--skip-span-check", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
-    from oshdb_spark.pipeline import (
-        spatial_join_pipeline,
-        verify_spans,
-        write_resumable,
-    )
+    from oshdb_spark.api import OSHDB, SnapshotView
+    from oshdb_spark.plans.lineage import input_fingerprint, run_partitioned
+    from oshdb_spark.sources.entities import verify_span_equality
 
     spark = SparkSession.builder.appName("oshdb_spark_pipeline").getOrCreate()
     bbox = tuple(float(x) for x in args.bbox.split(","))
     ts = [int(x) for x in args.timestamps.split(",")]
 
     t0 = time.monotonic()
-    res = spatial_join_pipeline(spark, spark.read.parquet(args.docs), bbox, ts)
-    violations = 0 if args.skip_span_check else verify_spans(res)
-    manifests = write_resumable(res, args.out, n_buckets=args.buckets)
+    docs = spark.read.parquet(args.docs)
+    # localCheckpoint cuts the lineage so the span check and each bucket
+    # write reuse the snapshot rows instead of recomputing them
+    snaps = (
+        SnapshotView.on(OSHDB.from_docs(spark, docs))
+        .area_of_interest(bbox=bbox)
+        .timestamps(ts)
+        .dataframe()
+        .localCheckpoint()
+    )
+    violations = verify_span_equality(docs, snaps)
+    # the checkpointed rows have no stable plan identity: resume keys on
+    # the docs table's file listing instead
+    manifests = run_partitioned(
+        snaps.withColumn(
+            "__key", F.concat_ws("/", "type", F.col("id").cast("string"))
+        ),
+        args.out,
+        bucket_key="__key",
+        n_buckets=args.buckets,
+        fingerprint=input_fingerprint(docs),
+    )
     wall = time.monotonic() - t0
     rows = sum(m.rows for m in manifests)
     print(

@@ -204,3 +204,37 @@ def test_snapshot_build_starts_no_job(spark, docs_db, filt):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == []
+
+
+# ---------------------------------------------------------------------------
+# tile assignment: one Arrow kernel evaluates both cells, so the insert
+# cell adds no Python boundary next to the quadcell UDF
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["plain", "cached"])
+def test_assign_cells_plan_has_one_python_node_per_branch(
+    spark, docs_parquet, cached
+):
+    from oshdb_spark.operators.tiling import assign_cells
+    from oshdb_spark.sources.entities import extract_entities
+
+    ents = extract_entities(spark.read.parquet(docs_parquet[0]))
+    if cached:  # the store ETL caches its input before tiling
+        ents = ents.cache()
+    try:
+        plan = _plan(assign_cells(ents))
+    finally:
+        ents.unpersist()
+    python_nodes = [l for l in plan.splitlines() if "EvalPython" in l]
+    # one ArrowEvalPython per union branch of the lifetime bboxes (nodes,
+    # owners), each evaluating the insert-cell and the quadcell UDF
+    assert len(python_nodes) == 2, plan[:3000]
+    for line in python_nodes:
+        assert "ArrowEvalPython" in line, line
+        assert line.count("_udf(") == 2, line
+    # at this input size: 5 shuffles (the node aggregation, whose subtree
+    # appears twice, the owner aggregation and both sides of the join back
+    # onto the entity versions) and 2 broadcasts (the way-expansion and
+    # edge joins)
+    assert plan.count("Exchange") == 7, plan[:3000]

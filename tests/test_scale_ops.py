@@ -1,5 +1,5 @@
 """M7 scale ops: salted skew joins, lineage/checkpoint resume, and the
-end-to-end docs pipeline (north_rule headline)."""
+AOI snapshot query the spark-submit pipeline issues over docs."""
 
 import json
 import os
@@ -8,11 +8,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from oshdb_spark.pipeline import (
-    spatial_join_pipeline,
-    verify_spans,
-    write_resumable,
-)
 from oshdb_spark.plans.lineage import (
     completed_buckets,
     input_fingerprint,
@@ -112,7 +107,7 @@ def test_lineage_fingerprint_invalidates(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# end-to-end pipeline
+# the docs AOI query of scripts/run_pipeline.py
 # ---------------------------------------------------------------------------
 
 
@@ -125,35 +120,30 @@ def docs_df(spark, docs_parquet):
 BBOX = (-60.0, -40.0, 60.0, 40.0)
 
 
-def test_pipeline_end_to_end(spark, docs_df):
-    res = spatial_join_pipeline(spark, docs_df, BBOX, TS)
-    n = res.snapshots.count()
-    assert n > 0
-    agg_total = res.aggregated.agg(F.sum("cnt")).collect()[0][0]
-    assert agg_total == n
-    assert verify_spans(res) == 0
-
-
-def test_pipeline_pruning_transparent(spark, docs_df):
-    """Cell-range pruning + member closure must not change the result set
-    vs running the view over ALL entities (OSHDB guarantee: the enlarged
-    ranges find every feature extending into the AOI)."""
+def test_docs_aoi_view_equals_snapshot_over_all_entities(spark, docs_df):
+    """The public-API AOI view over docs (what run_pipeline.py writes)
+    equals snapshot_view over ALL entities: same schema, same rows, and
+    every row still joins back to its source doc."""
+    from oshdb_spark.api import OSHDB, SnapshotView
     from oshdb_spark.operators.snapshot import snapshot_view
-    from oshdb_spark.sources.entities import extract_entities
+    from oshdb_spark.sources.entities import (
+        extract_entities,
+        verify_span_equality,
+    )
 
-    res = spatial_join_pipeline(spark, docs_df, BBOX, TS)
+    view = (
+        SnapshotView.on(OSHDB.from_docs(spark, docs_df))
+        .area_of_interest(bbox=BBOX)
+        .timestamps(TS)
+        .dataframe()
+    )
     full = snapshot_view(extract_entities(docs_df), TS, bbox_deg=BBOX)
-    got = {(r["type"], r["id"], r["snap_ts"]) for r in res.snapshots.collect()}
-    exp = {(r["type"], r["id"], r["snap_ts"]) for r in full.collect()}
-    assert got == exp
-
-
-def test_pipeline_resumable_write(spark, docs_df, tmp_path):
-    res = spatial_join_pipeline(spark, docs_df, BBOX, TS[:1])
-    out = str(tmp_path / "pipe")
-    manifests = write_resumable(res, out, n_buckets=3)
-    assert sum(m.rows for m in manifests) == res.snapshots.count()
-    assert len(lineage_report(out)) == 3
+    assert view.schema == full.schema
+    key = ["doc_id", "type", "id", "version", "snap_ts", "clipped_wkt"]
+    assert view.select(key).exceptAll(full.select(key)).count() == 0
+    assert full.select(key).exceptAll(view.select(key)).count() == 0
+    assert full.count() > 0
+    assert verify_span_equality(docs_df, view) == 0
 
 
 # ---------------------------------------------------------------------------

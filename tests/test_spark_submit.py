@@ -3,8 +3,9 @@ mode): package the engine with scripts/build_pyfiles.sh, launch
 scripts/run_pipeline.py through a REAL spark-submit subprocess whose
 PYTHONPATH does NOT contain the repo — the zip is the only way the
 executors and driver can import oshdb_spark — and assert the pipeline
-completes, holds the span-sequence invariant, and resumes from its
-per-bucket lineage manifests on a second identical invocation.
+completes, holds the span-sequence invariant, writes exactly the rows of
+the in-process snapshot view, and resumes from its per-bucket lineage
+manifests on a second identical invocation.
 """
 
 from __future__ import annotations
@@ -18,6 +19,9 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BBOX = (-60, -40, 60, 40)
+TS = [1262304000, 1325376000]
+N_BUCKETS = 4
 
 pytestmark = pytest.mark.skipif(
     shutil.which("spark-submit") is None, reason="spark-submit not on PATH"
@@ -51,10 +55,10 @@ def _submit(pyfiles_zip, docs, out, tmp):
             os.path.join(REPO, "scripts", "run_pipeline.py"),
             "--docs", docs,
             # = form: a leading "-60" would otherwise parse as an option
-            "--bbox=-60,-40,60,40",
-            "--timestamps", "1262304000,1325376000",
+            "--bbox=" + ",".join(str(v) for v in BBOX),
+            "--timestamps", ",".join(str(t) for t in TS),
             "--out", out,
-            "--buckets", "4",
+            "--buckets", str(N_BUCKETS),
         ],
         cwd=str(tmp),
         env=env,
@@ -72,8 +76,11 @@ def _submit(pyfiles_zip, docs, out, tmp):
     return json.loads(lines[-1])
 
 
-def test_pyfiles_launch_and_resume(pyfiles_zip, tmp_path):
+def test_pyfiles_launch_and_resume(spark, pyfiles_zip, tmp_path):
+    from oshdb_spark.operators.snapshot import snapshot_view
+    from oshdb_spark.plans.lineage import input_fingerprint, read_output
     from oshdb_spark.sources.docs import write_docs_parquet
+    from oshdb_spark.sources.entities import extract_entities
 
     docs = str(tmp_path / "docs.parquet")
     write_docs_parquet(docs, n_features=120, seed=42)
@@ -82,7 +89,21 @@ def test_pyfiles_launch_and_resume(pyfiles_zip, tmp_path):
     first = _submit(pyfiles_zip, docs, out, tmp_path)
     assert first["rows_written"] > 0
     assert first["span_violations"] == 0
-    assert first["buckets_run"] == 4
+    assert first["buckets_run"] == N_BUCKETS
+
+    # the committed output holds exactly the in-process snapshot rows
+    docs_df = spark.read.parquet(docs)
+    key = ["type", "id", "version", "snap_ts"]
+    written = read_output(spark, out, N_BUCKETS, input_fingerprint(docs_df))
+    got = [tuple(r) for r in written.select(*key).collect()]
+    exp = {
+        tuple(r)
+        for r in snapshot_view(
+            extract_entities(docs_df), TS, bbox_deg=BBOX
+        ).select(*key).collect()
+    }
+    assert len(got) == first["rows_written"] == len(set(got))
+    assert set(got) == exp
 
     # identical re-invocation: every bucket's lineage manifest is already
     # committed, so the resumable writer runs zero buckets

@@ -130,6 +130,27 @@ def test_corrupt_manifest_degrades_to_full_listing(spark, store_path):
         assert json.load(fh)["entries"]
 
 
+def test_etl_leaves_no_persisted_data(spark, docs_parquet, tmp_path):
+    """write_entities_table releases what it cached for the write; an
+    input the caller cached stays cached."""
+    path, _, _ = docs_parquet
+    # a plan no other test caches, so the ETL's own cache is a new entry
+    ents = extract_entities(spark.read.parquet(path)).filter("id % 3 <> 1")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    write_entities_table(ents, str(tmp_path / "etl"), n_buckets=4)
+    assert jsc.getPersistentRDDs().size() == before
+    assert read_entities_table(spark, str(tmp_path / "etl")).count() == ents.count()
+
+    ents.cache()
+    try:
+        write_entities_table(ents, str(tmp_path / "etl2"), n_buckets=4)
+        assert ents.is_cached
+        assert ents.storageLevel.useMemory
+    finally:
+        ents.unpersist()
+
+
 def test_knn_plan_broadcasts(spark, docs_parquet):
     from oshdb_spark.operators.knn import knn_join
 

@@ -1,4 +1,4 @@
-"""Tile assignment: JVM Column expression vs Arrow UDF vs scalar port parity,
+"""Tile assignment: Arrow kernel vs Column reference vs scalar port parity,
 plus query-side cell-range pruning."""
 
 import numpy as np
@@ -9,9 +9,11 @@ from oshdb_spark.grid import XYGridTree, to_osm
 from oshdb_spark.operators.tiling import (
     assign_cells,
     cell_range_filter,
+    lifetime_bboxes,
     query_cell_ranges,
     query_cells_df,
     xy_cell_id_col,
+    xy_insert_cell_col,
 )
 from oshdb_spark.sources.entities import extract_entities
 
@@ -48,15 +50,31 @@ def test_xy_cell_id_col_matches_scalar(spark):
             assert row["c"] == g.get_id(row["lon"], row["lat"]), (zoom, row)
 
 
-def test_assign_cells_jvm_and_udf_paths_agree(spark, entities):
-    a = assign_cells(entities, use_udf_path=False).select(
-        "type", "id", "version", "cell_zoom", "cell_id", "qcell"
+def test_assign_cells_matches_column_reference(spark, entities):
+    """The Arrow insert-cell kernel in assign_cells equals the Column
+    reference over the same lifetime bboxes, packed level id included."""
+    cols = ["type", "id", "version", "cell_zoom", "cell_id", "level_id"]
+    got = assign_cells(entities).select(*cols)
+    ref_cells = lifetime_bboxes(entities).select(
+        "type",
+        "id",
+        xy_insert_cell_col(
+            F.col("minlon"), F.col("minlat"), F.col("maxlon"), F.col("maxlat")
+        ).alias("c"),
     )
-    b = assign_cells(entities, use_udf_path=True).select(
-        "type", "id", "version", "cell_zoom", "cell_id", "qcell"
+    ref = entities.join(ref_cells, ["type", "id"], "left").select(
+        "type",
+        "id",
+        "version",
+        F.col("c.cell_zoom").alias("cell_zoom"),
+        F.col("c.cell_id").alias("cell_id"),
+        F.col("c.level_id").alias("level_id"),
     )
-    diff = a.exceptAll(b)
-    assert diff.count() == 0
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
+    tiled = got.filter("level_id IS NOT NULL").select("type").distinct()
+    types = {r["type"] for r in tiled.collect()}
+    assert types == {"node", "way", "relation"}
 
 
 def test_assign_cells_matches_scalar_insert_rule(spark, entities, docs_parquet):
