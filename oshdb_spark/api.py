@@ -315,16 +315,10 @@ class _MapReducer:
         if polygon is not None:
             from oshdb_spark.geometry.model import bounds
 
-            b = bounds(polygon)
-            eff = self.state.bbox_deg
-            if eff is None:
-                eff = b
-            else:
-                eff = (
-                    max(eff[0], b[0]), max(eff[1], b[1]),
-                    min(eff[2], b[2]), min(eff[3], b[3]),
-                )
-            return self._with(bbox_deg=eff, polygon=_freeze(polygon))
+            return self._with(
+                bbox_deg=self._and_bbox(bounds(polygon)),
+                polygon=_freeze(polygon),
+            )
         if bbox is not None:
             from oshdb_spark.geometry.bbox import BoundingBox
 
@@ -332,14 +326,18 @@ class _MapReducer:
                 # OSHDBBoundingBox value type (OSHDBBoundingBox.java) —
                 # convert fixed-point ints to the engine's degree tuple.
                 bbox = bbox.degrees()
-            eff = self.state.bbox_deg
-            if eff is not None:
-                bbox = (
-                    max(eff[0], bbox[0]), max(eff[1], bbox[1]),
-                    min(eff[2], bbox[2]), min(eff[3], bbox[3]),
-                )
-            return self._with(bbox_deg=tuple(bbox))
+            return self._with(bbox_deg=self._and_bbox(bbox))
         return self
+
+    def _and_bbox(self, bbox) -> tuple[float, float, float, float]:
+        """``bbox`` intersected with the AOI bbox set so far."""
+        eff = self.state.bbox_deg
+        if eff is None:
+            return tuple(bbox)
+        return (
+            max(eff[0], bbox[0]), max(eff[1], bbox[1]),
+            min(eff[2], bbox[2]), min(eff[3], bbox[3]),
+        )
 
     def timestamps(self, *args) -> "_MapReducer":
         """timestamps([t...]) | timestamps(start, end) |
@@ -550,56 +548,6 @@ class _MapReducer:
         for c in ("g_vertices", "g_outers", "g_inners", "g_roundness",
                   "g_squareness"):
             df = df.withColumn(c, m[c])
-        return df
-
-    def _apply_polygon(self, df: DataFrame) -> DataFrame:
-        if self.state.polygon is None:
-            return df
-        from oshdb_spark.geometry.model import bounds as _bounds
-        from oshdb_spark.operators.geometry_ops import (
-            clip_polygon_udf,
-            intersects_polygon_udf,
-        )
-
-        poly = _thaw(self.state.polygon)
-        geom = (
-            F.col("geom") if "geom" in df.columns
-            else F.lit(None).cast("binary")
-        )
-        if "minx" in df.columns:
-            # JVM-side bbox-overlap gate (bboxOutsidePolygon pre-filter,
-            # CellIterator.java:529-531): the exact intersects UDF decodes
-            # only candidate rows; the bbox columns are internal-only
-            pb = _bounds(poly)
-            cand = (
-                F.col("minx").isNotNull()
-                & (F.col("maxx") >= float(pb[0]))
-                & (F.col("minx") <= float(pb[2]))
-                & (F.col("maxy") >= float(pb[1]))
-                & (F.col("miny") <= float(pb[3]))
-            )
-            hit = intersects_polygon_udf(poly)(
-                F.when(cand, geom), F.when(cand, F.col("wkt"))
-            )
-            df = df.filter(cand & F.coalesce(hit, F.lit(False))).drop(
-                "minx", "miny", "maxx", "maxy"
-            )
-        else:
-            df = df.filter(intersects_polygon_udf(poly)(geom, F.col("wkt")))
-        # geometryClipped-to-polygon (OSHDBGeometryBuilder.getGeometryClipped,
-        # :110-137): exact for arbitrary (Multi)Polygon AOIs — convex fast
-        # path or triangle-decomposed general clip (geometry/polyclip); the
-        # clipped WKT is materialized from the packed result in one pass
-        from oshdb_spark.operators.geometry_ops import to_wkt_udf
-
-        cu = clip_polygon_udf(poly)
-        df = (
-            df.withColumn("pc", cu(geom, F.col("wkt")))
-            .withColumn("clipped_wkt", to_wkt_udf()(F.col("pc.clipped_geom")))
-            .withColumn("clipped_area", F.col("pc.clipped_area"))
-            .withColumn("clipped_length", F.col("pc.clipped_length"))
-            .drop("pc")
-        )
         return df
 
     # -- terminal reducers (global; MapReducer.java:1000-1283) -------------
@@ -854,8 +802,8 @@ class SnapshotView(_MapReducer):
             list(self.state.ts),
             bbox_deg=self.state.bbox_deg,
             interpreter=self.db.interpreter,
-            keep_bbox=self.state.polygon is not None,
             types=self._type_set(),
+            polygon=_thaw(self.state.polygon),
         )
         df = self._attach_metric_columns(df)
         # version/geometry predicate on the UNCLIPPED state
@@ -864,7 +812,7 @@ class SnapshotView(_MapReducer):
             df = df.filter(node.osm_column())
         for c in self.state.raw_filters:
             df = df.filter(c)
-        return self._apply_polygon(df)
+        return df
 
 
 class ContributionView(_MapReducer):
@@ -899,100 +847,6 @@ class ContributionView(_MapReducer):
         for n in alive_nodes:
             c = compile_with_packed_geom(n)
             match = c if match is None else (match & c)
-        # the AOI participates in ALIVENESS: a geometry moving out of the
-        # bbox/polygon is a DELETION, moving in a CREATION
-        # (CellIterator.java:665-679 "geometry became empty in AOI").
-        # JVM-side three-way classification against the state bbox columns
-        # (CellIterator.java:417-459 short-circuits): fully inside -> alive,
-        # fully outside / empty -> not, and the Python clip UDF sees only
-        # BORDER rows (null-gated Arrow batch) — the same single-pass shape
-        # as the snapshot view's clip stage
-        clip_col = None
-        if self.state.bbox_deg is not None and self.state.polygon is None:
-            from oshdb_spark.operators.geometry_ops import clip_udf
-
-            bminx, bminy, bmaxx, bmaxy = (
-                float(v) for v in self.state.bbox_deg
-            )
-            has_b = F.col("minx").isNotNull()
-            inside = (
-                (F.col("minx") >= bminx) & (F.col("miny") >= bminy)
-                & (F.col("maxx") <= bmaxx) & (F.col("maxy") <= bmaxy)
-            )
-            outside = (
-                (F.col("maxx") < bminx) | (F.col("minx") > bmaxx)
-                | (F.col("maxy") < bminy) | (F.col("miny") > bmaxy)
-            )
-            # border rows are always ways/relations (a node's degenerate
-            # bbox is never border), so the clip gate reads packed bytes.
-            # ONE clipped-geometry column serves both aliveness (clip
-            # empty <=> outside the AOI) and GEOMETRY_CHANGE detection —
-            # the reference classifies on the CLIPPED geometry
-            # (CellIterator.java:685-697), so a member change entirely
-            # outside the box yields an empty-activity contribution.
-            # 1-byte marker for outside/empty rows; packed bytes (border)
-            # or the unclipped binary (fully inside, clip == identity).
-            border = has_b & ~inside & ~outside
-            cu = clip_udf(self.state.bbox_deg)
-            clip_col = (
-                F.when(border, cu(F.when(border, F.col("geom")))["clipped_geom"])
-                .when(
-                    has_b & inside,
-                    F.coalesce(F.col("geom"), F.col("wkt").cast("binary")),
-                )
-                .otherwise(F.lit(b"\x00"))
-            )
-            # classify materializes clip_col as __clip_bin before applying
-            # the aliveness match, so the clip UDF runs exactly once
-            aoi = F.length(F.col("__clip_bin")) > 5
-            match = aoi if match is None else (match & aoi)
-        if self.state.polygon is not None:
-            # polygon AOI: SAME materialize-clipped-binary-then-compare
-            # shape as the bbox path — GEOMETRY_CHANGE compares the
-            # geometries CLIPPED to the polygon (CellIterator.java:685-697),
-            # so a member change entirely outside the AOI yields an
-            # empty-activity contribution, and aliveness is clip-non-empty
-            # (CellIterator.java:665-679).  JVM-side envelope gate (the
-            # bboxOutsidePolygon pre-filter, CellIterator.java:529-531)
-            # keeps the Python clipper off rows that can't overlap; the
-            # effective bbox (envelope, or a narrower user bbox — AOIs
-            # combine by intersection, CHANGELOG 1.2.0 "#512") feeds both
-            # the gate and the clipper's pre-clip.
-            from oshdb_spark.geometry.model import bounds as _bounds
-            from oshdb_spark.operators.geometry_ops import clip_polygon_udf
-
-            poly = _thaw(self.state.polygon)
-            pb = _bounds(poly)
-            eff = self.state.bbox_deg or tuple(float(v) for v in pb)
-            pre_bbox = None
-            if (
-                eff[0] > pb[0] or eff[1] > pb[1]
-                or eff[2] < pb[2] or eff[3] < pb[3]
-            ):
-                pre_bbox = eff
-            cand = (
-                F.col("minx").isNotNull()
-                & (F.col("maxx") >= float(eff[0]))
-                & (F.col("minx") <= float(eff[2]))
-                & (F.col("maxy") >= float(eff[1]))
-                & (F.col("miny") <= float(eff[3]))
-            )
-            cpu = clip_polygon_udf(poly, pre_bbox=pre_bbox)
-            # 1-byte marker for envelope-disjoint rows; packed (possibly
-            # typed-empty, 5-byte) clip output for candidates.  classify
-            # materializes this once as __clip_bin (one Arrow pass).
-            clip_col = (
-                F.when(
-                    cand,
-                    cpu(
-                        F.when(cand, F.col("geom")),
-                        F.when(cand, F.col("wkt")),
-                    )["clipped_geom"],
-                )
-                .otherwise(F.lit(b"\x00"))
-            )
-            aoi = F.length(F.col("__clip_bin")) > 5
-            match = aoi if match is None else (match & aoi)
         types = self._type_set()
         df = contribution_view(
             self._osh_prefilter(self._entities(), alive_nodes),
@@ -1002,69 +856,13 @@ class ContributionView(_MapReducer):
             types=types,
             osm_filter=match,
             attach_metrics=needs_metrics,
-            clip_col=clip_col,
+            bbox_deg=self.state.bbox_deg,
+            polygon=_thaw(self.state.polygon),
         )
         for n in post_nodes:
             df = df.filter(n.osm_column())
         for c in self.state.raw_filters:
             df = df.filter(c)
-        if self.state.polygon is not None:
-            # polygon output clip (getGeometryClipped to the AOI polygon):
-            # typed EMPTY for envelope-disjoint rows, the exact polygon
-            # clipper on candidates only (bbox in/out short-circuits inside
-            # the UDF); same cand/poly/pre_bbox as the aliveness stage
-            from oshdb_spark.operators.geometry_ops import to_wkt_udf
-
-            empty_wkt = F.concat(
-                F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
-            )
-            df = (
-                df.withColumn(
-                    "c",
-                    cpu(F.when(cand, F.col("geom")), F.when(cand, F.col("wkt"))),
-                )
-                .withColumn(
-                    "clipped_wkt",
-                    F.when(~cand, empty_wkt).otherwise(
-                        to_wkt_udf()(F.col("c.clipped_geom"))
-                    ),
-                )
-                .drop("c")
-            )
-        elif self.state.bbox_deg is not None:
-            # single-pass output clip: identity for fully-inside rows,
-            # typed EMPTY for fully-outside, Python only on border rows
-            # (always ways/relations, so the clip UDF reads packed bytes
-            # and the WKT materializes from the packed result)
-            from oshdb_spark.operators.geometry_ops import clip_udf, to_wkt_udf
-
-            bminx, bminy, bmaxx, bmaxy = (
-                float(v) for v in self.state.bbox_deg
-            )
-            has_b = F.col("minx").isNotNull()
-            inside = (
-                (F.col("minx") >= bminx) & (F.col("miny") >= bminy)
-                & (F.col("maxx") <= bmaxx) & (F.col("maxy") <= bmaxy)
-            )
-            outside = (
-                (F.col("maxx") < bminx) | (F.col("minx") > bmaxx)
-                | (F.col("maxy") < bminy) | (F.col("miny") > bmaxy)
-            )
-            border = has_b & ~inside & ~outside
-            empty_wkt = F.concat(
-                F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
-            )
-            cu = clip_udf(self.state.bbox_deg)
-            df = (
-                df.withColumn("c", cu(F.when(border, F.col("geom"))))
-                .withColumn(
-                    "clipped_wkt",
-                    F.when(~has_b | inside, F.col("wkt"))
-                    .when(outside, empty_wkt)
-                    .otherwise(to_wkt_udf()(F.col("c.clipped_geom"))),
-                )
-                .drop("c")
-            )
         return df
 
 

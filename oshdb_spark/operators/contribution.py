@@ -34,14 +34,16 @@ from pyspark.sql import functions as F
 
 from oshdb_spark.geometry.taginterpreter import TagInterpreter
 from oshdb_spark.operators.geometry_ops import (
+    aoi_clip,
+    clip_is_empty,
+    clipped_wkt_col,
     is_empty_geom_cols,
-    is_empty_wkt_col,
     node_geometry_cols,
     relation_geometry_udf,
     to_wkt_udf,
     way_geometry_udf,
 )
-from oshdb_spark.operators.snapshot import with_validity
+from oshdb_spark.operators.snapshot import has_nested_relations, with_validity
 
 CONTRIB_TYPES = ["CREATION", "DELETION", "TAG_CHANGE", "GEOMETRY_CHANGE"]
 
@@ -634,7 +636,8 @@ def _relation_states(
 def classify_contributions(
     states: DataFrame,
     match_col: F.Column | None = None,
-    clip_col: F.Column | None = None,
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    polygon: dict | None = None,
 ) -> DataFrame:
     """lag() window + when/otherwise classification (CellIterator.java:586-726).
 
@@ -644,16 +647,17 @@ def classify_contributions(
     keeping sum(creations) - sum(deletions) consistent with the snapshot view
     (views.md "Contribution View").
 
-    ``clip_col`` (binary): when an AOI is set, GEOMETRY_CHANGE compares the
-    CLIPPED geometries, not the full ones — the reference's activity lambda
-    tests ``!prevGeometry.equals(geom)`` on constructClippedGeometry's
-    output (CellIterator.java:685-697), so a member moving entirely outside
-    the clip box yields a contribution row with EMPTY activities.  The
-    column is materialized once ("__clip_bin") so the clip UDF inside it
-    runs one Arrow pass; aliveness gates may reference it by name.
+    ``bbox_deg``/``polygon``: the area of interest, as in
+    ``snapshot_view``.  Each state is clipped once (``geometry_ops.aoi_clip``) and
+    that one clip serves three uses: the AOI participates in aliveness
+    (the clip is non-empty — a geometry moving out of the AOI is a
+    DELETION, moving in a CREATION, CellIterator.java:665-679);
+    GEOMETRY_CHANGE compares the CLIPPED geometries, as the reference's
+    activity lambda tests ``!prevGeometry.equals(geom)`` on
+    constructClippedGeometry's output (CellIterator.java:685-697), so a
+    member moving entirely outside the AOI yields a contribution row with
+    EMPTY activities; and the row's ``clipped_wkt`` output column.
     """
-    if clip_col is not None:
-        states = states.withColumn("__clip_bin", clip_col)
     w = Window.partitionBy("type", "id").orderBy("event_ts")
     effective = F.col("visible") & ~is_empty_geom_cols(
         F.col("geom"), F.col("wkt")
@@ -663,13 +667,18 @@ def classify_contributions(
     # gbin unifies the dual geometry representation for change detection:
     # packed bytes for ways/relations, the node WKT string cast to binary —
     # both JVM-side byte compares, no decode
+    gbin = F.coalesce(F.col("geom"), F.col("wkt").cast("binary"))
+    aoi = bbox_deg is not None or polygon is not None
+    if aoi:
+        states = states.withColumn("__clip", aoi_clip(bbox_deg, polygon))
+        clip = F.col("__clip")
+        effective = effective & ~clip_is_empty(clip)
+        gbin = F.coalesce(
+            clip["clipped_geom"], clip["clipped_wkt"].cast("binary")
+        )
     st = (
         states.withColumn("alive", effective)
-        .withColumn(
-            "gbin",
-            F.col("__clip_bin") if clip_col is not None
-            else F.coalesce(F.col("geom"), F.col("wkt").cast("binary")),
-        )
+        .withColumn("gbin", gbin)
         .withColumn("prev_alive", F.lag("alive").over(w))
         .withColumn("prev_gbin", F.lag("gbin").over(w))
         .withColumn("prev_geom", F.lag("geom").over(w))
@@ -701,12 +710,10 @@ def classify_contributions(
     # dead->dead "events" are not contributions (CellIterator: prev==null &&
     # invisible -> skip)
     out = out.filter(F.col("alive") | prev_alive)
-    if clip_col is not None:
-        out = out.drop("__clip_bin")
     # output boundary: packed -> WKT exactly once, only for rows that
     # survived classification (nodes keep their JVM-built strings)
     wudf_wkt = to_wkt_udf()
-    return out.select(
+    out = out.select(
         "doc_id", "type", "id", "version", "visible", "tags",
         F.col("event_ts").alias("ts"),
         F.col("event_changeset").alias("changeset"),
@@ -724,7 +731,14 @@ def classify_contributions(
         # geometry bbox (null for empty): lets consumers classify against
         # an AOI JVM-side and invoke Python clip UDFs on border rows only
         "minx", "miny", "maxx", "maxy",
+        *(["__clip"] if aoi else []),
     )
+    if not aoi:
+        return out
+    # the row's own clip, rendered against the output wkt
+    return out.withColumn(
+        "clipped_wkt", clipped_wkt_col(F.col("__clip"), wudf_wkt)
+    ).drop("__clip")
 
 
 def _maps_equal(a, b):
@@ -754,7 +768,8 @@ def contribution_view(
     osm_filter: F.Column | None = None,
     include_old_style_multipolygons: bool = False,
     attach_metrics: bool = False,
-    clip_col: F.Column | None = None,
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    polygon: dict | None = None,
 ) -> DataFrame:
     """The full contribution view over [t_start, t_end].
 
@@ -772,6 +787,11 @@ def contribution_view(
     are assumed — pass the narrowed set explicitly to skip the way/relation
     member-resolution machinery (an extra full-table type-discovery scan
     here would cost more than it saves at scale).
+
+    ``bbox_deg``/``polygon``: the area of interest, the same pair
+    ``snapshot_view`` takes.  It participates in aliveness and change
+    detection (see ``classify_contributions``) and adds ``clipped_wkt``,
+    each row's geometry clipped to the AOI.
     """
     if types is None:
         types = {"node", "way", "relation"}
@@ -790,17 +810,10 @@ def contribution_view(
             ws = _way_states(events, ways, nodes, interpreter)
             states = ws if states is None else states.unionByName(ws)
         if "relation" in types:
-            # one cheap probe on the (small) relation subset: super-relations
-            # trigger one level of nested member resolution
-            has_nested = (
-                rels.filter(
-                    F.exists("members", lambda m: m["type"] == F.lit("relation"))
-                ).limit(1).count()
-                > 0
-            )
+            # super-relations trigger one level of nested member resolution
             rs = _relation_states(
                 events, rels, ways, nodes, interpreter,
-                resolve_nested=has_nested,
+                resolve_nested=has_nested_relations(rels),
                 include_old_style=include_old_style_multipolygons,
             )
             states = rs if states is None else states.unionByName(rs)
@@ -818,7 +831,7 @@ def contribution_view(
                   "g_squareness"):
             states = states.withColumn(c, m[c])
     classified = classify_contributions(
-        states, match_col=osm_filter, clip_col=clip_col
+        states, match_col=osm_filter, bbox_deg=bbox_deg, polygon=polygon
     )
     # half-open [t_start, t_end): OSHDBTimestampInterval.includes is
     # from <= t < to, so a contribution at exactly t_end is excluded

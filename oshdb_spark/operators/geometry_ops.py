@@ -522,6 +522,118 @@ def clip_polygon_udf(polygon_geom: dict, pre_bbox=None):
     return _udf
 
 
+def bbox_overlaps(bbox_deg):
+    """JVM-side candidate gate: the row's geometry bbox (the ``minx`` ..
+    ``maxy`` columns, null for empty geometries) overlaps ``bbox_deg`` —
+    the bboxOutsidePolygon pre-filter (CellIterator.java:529-531)."""
+    minx, miny, maxx, maxy = (float(v) for v in bbox_deg)
+    return (
+        F.col("minx").isNotNull()
+        & (F.col("maxx") >= minx) & (F.col("minx") <= maxx)
+        & (F.col("maxy") >= miny) & (F.col("miny") <= maxy)
+    )
+
+
+def typed_empty_wkt(wkt_col):
+    """The empty geometry of the row's own type as WKT ("<TYPE> EMPTY")."""
+    return F.concat(F.regexp_extract(wkt_col, "^[A-Z]+", 0), F.lit(" EMPTY"))
+
+
+def aoi_clip(bbox_deg, polygon: dict | None = None, packed: bool = True):
+    """The current row's geometry clipped to the area of interest:
+    struct(clipped_geom, clipped_wkt, clipped_area, clipped_length),
+    computed from the ``geom``/``wkt``/``area``/``length`` and ``minx`` ..
+    ``maxy`` columns.  Both views clip through this one stage
+    (CellIterator.constructClippedGeometry, CellIterator.java:417-446).
+
+    ``bbox_deg`` alone: the JVM classifies each row against the bbox —
+    fully inside (or no bbox: an empty geometry) is the identity, fully
+    outside a typed empty, and only BORDER rows reach the Python clip.
+    Border rows are always ways/relations (a node's degenerate bbox is
+    never border), so with ``packed=False`` (no row carries packed
+    geometry) no Python UDF is planned.
+
+    With ``polygon``, ``bbox_deg`` is the effective AOI bbox (the
+    polygon's envelope, or that intersected with a user bbox — AOIs
+    combine by intersection, CHANGELOG 1.2.0 "#512").  Rows whose bbox
+    overlaps it reach the exact polygon clipper, pre-clipped to the bbox
+    when it is narrower than the envelope; the rest are typed empty.
+    ``bbox_deg=None`` means the envelope.
+
+    Packed rows carry the clip in ``clipped_geom`` (identity rows share
+    the row's own bytes) and a null ``clipped_wkt``, which each view
+    renders at its output boundary (:func:`clipped_wkt_col`).  Node rows
+    the JVM decided carry their WKT (or its typed empty) in
+    ``clipped_wkt`` and a null ``clipped_geom``; a node the polygon
+    clipper saw comes back packed.  So :func:`is_empty_geom_cols` over
+    the two fields tests the clip for emptiness.
+    """
+    geom, wkt = F.col("geom"), F.col("wkt")
+    if bbox_deg is None:
+        bbox_deg = bounds(polygon)
+    if polygon is None:
+        minx, miny, maxx, maxy = (float(v) for v in bbox_deg)
+        inside = (
+            (F.col("minx") >= minx) & (F.col("miny") >= miny)
+            & (F.col("maxx") <= maxx) & (F.col("maxy") <= maxy)
+        )
+        identity = F.col("minx").isNull() | inside
+        border = bbox_overlaps(bbox_deg) & ~inside
+        to_python = border if packed else F.lit(False)
+        py = clip_udf(bbox_deg)(F.when(border, geom)) if packed else None
+    else:
+        pb = bounds(polygon)
+        narrower = (
+            bbox_deg[0] > pb[0] or bbox_deg[1] > pb[1]
+            or bbox_deg[2] < pb[2] or bbox_deg[3] < pb[3]
+        )
+        identity = F.lit(False)
+        to_python = bbox_overlaps(bbox_deg)
+        py = clip_polygon_udf(polygon, pre_bbox=bbox_deg if narrower else None)(
+            F.when(to_python, geom), F.when(to_python, wkt)
+        )
+
+    def pick(same, python_field, outside):
+        out = F.when(identity, same)
+        if py is not None:
+            out = out.when(to_python, py[python_field])
+        return out.otherwise(outside)
+
+    # typed empty, packed: the gtype byte + a zero count
+    empty_geom = F.concat(F.substring(geom, 1, 1), F.lit(b"\x00\x00\x00\x00"))
+    node_jvm = geom.isNull() & ~to_python
+    return F.struct(
+        pick(geom, "clipped_geom", empty_geom).alias("clipped_geom"),
+        F.when(node_jvm & identity, wkt)
+        .when(node_jvm, typed_empty_wkt(wkt))
+        .alias("clipped_wkt"),
+        pick(F.col("area"), "clipped_area", F.lit(0.0)).alias("clipped_area"),
+        pick(F.col("length"), "clipped_length", F.lit(0.0)).alias("clipped_length"),
+    )
+
+
+def clipped_wkt_col(clip, to_wkt=None):
+    """Output-boundary WKT of an :func:`aoi_clip` struct, for the row's
+    ``geom``/``wkt`` columns: the JVM-decided node WKT, the row's own
+    ``wkt`` when the clip is the identity (a JVM byte compare), else the
+    packed clip rendered by ``to_wkt`` (:func:`to_wkt_udf`, which sees
+    only those rows).  ``to_wkt=None`` when no row can carry a packed
+    clip (a node-only bbox view)."""
+    if to_wkt is None:
+        return clip["clipped_wkt"]
+    same = clip["clipped_geom"].eqNullSafe(F.col("geom"))
+    return F.coalesce(
+        clip["clipped_wkt"],
+        F.when(same, F.col("wkt")),
+        to_wkt(F.when(~same, clip["clipped_geom"])),
+    )
+
+
+def clip_is_empty(clip):
+    """The :func:`aoi_clip` struct holds an empty geometry."""
+    return is_empty_geom_cols(clip["clipped_geom"], clip["clipped_wkt"])
+
+
 def intersects_polygon_udf(polygon_geom: dict):
     """(geom binary, wkt) -> boolean: geometry intersects the (broadcast)
     query polygon; decodes whichever representation the row carries.

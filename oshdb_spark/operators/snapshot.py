@@ -20,7 +20,7 @@ as a DataFrame pipeline:
   skip invisible versions (:319-322)          filter(visible)
   skip zero-member ways/relations (:323-328)  empty geometry filter
   lastModificationTimestamp (:288-302)        greatest(own ts, member ts)
-  clipped geometry (:417-459)                 clip_udf short-circuits
+  clipped geometry (:417-459)                 geometry_ops.aoi_clip
   emit iff fullyInside or !geom.isEmpty()     filter on clipped emptiness
 
 The timestamp list is driver-side and small (like the reference's
@@ -42,12 +42,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from oshdb_spark.geometry.model import bounds
 from oshdb_spark.geometry.taginterpreter import TagInterpreter
 from oshdb_spark.operators.geometry_ops import (
-    clip_udf,
+    aoi_clip,
+    bbox_overlaps,
+    clip_is_empty,
+    clipped_wkt_col,
+    intersects_polygon_udf,
     is_empty_geom_cols,
-    is_empty_packed_col,
-    is_empty_wkt_col,
     node_geometry_cols,
     relation_geometry_udf,
     to_wkt_udf,
@@ -160,6 +163,17 @@ def way_lines(
     return grouped.withColumn("line", line).withColumn(
         "last_mod_ts", F.greatest(F.col("own_ts"), F.col("member_ts"))
     ).drop("pline", "own_ts", "member_ts")
+
+
+def has_nested_relations(rels: DataFrame) -> bool:
+    """Whether any relation has a relation member: one eager probe job on
+    the (small) relation subset."""
+    return (
+        rels.filter(
+            F.exists("members", lambda m: m["type"] == F.lit("relation"))
+        ).limit(1).count()
+        > 0
+    )
 
 
 def _relation_nesting_levels(rels: DataFrame):
@@ -390,13 +404,7 @@ def _relation_snapshots(
     # built last, their in-cycle members resolve to whatever exists —
     # partial geometry instead of a crash.
     rels = entities.filter(F.col("type") == "relation")
-    has_nested = (
-        rels.filter(
-            F.exists("members", lambda m: m["type"] == F.lit("relation"))
-        ).limit(1).count()
-        > 0
-    )
-    if not has_nested:
+    if not has_nested_relations(rels):
         rels_out = _build_rels(rl)
     else:
         levels_df, max_lvl = _relation_nesting_levels(rels)
@@ -473,18 +481,23 @@ def snapshot_view(
     interpreter: TagInterpreter | None = None,
     keep_empty: bool = False,
     include_old_style_multipolygons: bool = False,
-    keep_bbox: bool = False,
     types: set[str] | frozenset[str] | None = None,
+    polygon: dict | None = None,
 ) -> DataFrame:
     """The snapshot view over the entity kinds in ``types``.
 
-    ``keep_bbox``: retain the internal minx/miny/maxx/maxy geometry-bbox
-    columns in the output so downstream AOI stages can classify JVM-side
-    (polygon overlap gating) — callers drop them before the public result.
-
     Returns one row per (entity, snapshot timestamp) where the entity exists,
     is visible, and (if bbox_deg given) its clipped geometry is non-empty;
-    adds clipped_wkt/clipped_area/clipped_length when clipping.
+    adds clipped_geom/clipped_wkt/clipped_area/clipped_length when clipping
+    (``clipped_geom`` is null on node rows, whose clip is the WKT).
+
+    ``polygon`` (a GeoJSON-like (Multi)Polygon dict) is a polygon area of
+    interest; ``bbox_deg`` is then the effective AOI bbox (default: the
+    polygon's envelope; a narrower user bbox intersects it).  A row must
+    pass the bbox stage above and intersect the polygon — touching
+    geometries stay, as in the reference — and the ``clipped_*`` columns
+    hold the geometry clipped to bbox ∩ polygon.  Both views clip through
+    ``geometry_ops.aoi_clip``.
 
     ``include_old_style_multipolygons`` (CellIterator.java:102-205
     constructor flag, :330-380 handling): relations with exactly one
@@ -503,9 +516,10 @@ def snapshot_view(
     - the relation lines, the nested-relation probe (the one eager job of
       this function), the nesting levels and the old-style fix-up only
       when ``relation`` is in the set;
-    - with neither ``way`` nor ``relation``, the clip and WKT stages are
-      Column expressions only: nodes are never border rows and their WKT
-      is built in the JVM, so no Python UDF is planned;
+    - with neither ``way`` nor ``relation`` and no ``polygon``, the clip
+      and WKT stages are Column expressions only: nodes are never border
+      rows of a bbox and their WKT is built in the JVM, so no Python UDF
+      is planned;
     - the empty set gives an empty frame with the full schema.
 
     The result equals the all-types result filtered to ``type in types``.
@@ -551,92 +565,46 @@ def snapshot_view(
         out = out.unionByName(p)
     if not keep_empty:
         out = out.filter(~is_empty_geom_cols(F.col("geom"), F.col("wkt")))
+    if polygon is not None and bbox_deg is None:
+        bbox_deg = bounds(polygon)
     if bbox_deg is not None:
-        # JVM-side classification against the geometry bbox columns
-        # (CellIterator.java:417-459 short-circuits, columnar): fully
-        # inside -> identity, fully outside -> typed empty — both pure
-        # Column expressions.  SINGLE PASS: the clip UDF receives the
-        # packed geometry only for border rows (NULL otherwise, near-zero
-        # Arrow + kernel cost), so the expensive upstream geometry-build
-        # UDFs are evaluated exactly once per row — no filter/union triple
-        # scan that could re-execute the build subtree per branch.  Border
-        # rows are always ways/relations (a node's degenerate bbox is never
-        # border), so gating on `geom` loses nothing, and a node-only view
-        # plans no clip UDF at all.
-        minx, miny, maxx, maxy = (float(v) for v in bbox_deg)
-        has_b = F.col("minx").isNotNull()
-        inside = (
-            (F.col("minx") >= minx) & (F.col("miny") >= miny)
-            & (F.col("maxx") <= maxx) & (F.col("maxy") <= maxy)
-        )
-        outside = (
-            (F.col("maxx") < minx) | (F.col("minx") > maxx)
-            | (F.col("maxy") < miny) | (F.col("miny") > maxy)
-        )
-        border = has_b & ~inside & ~outside
-        # typed empty, both representations: packed = gtype byte + zero
-        # count; WKT = "<TYPE> EMPTY" (nodes only)
-        empty_geom = F.concat(
-            F.substring(F.col("geom"), 1, 1), F.lit(b"\x00\x00\x00\x00")
-        )
-        empty_wkt = F.concat(
-            F.regexp_extract("wkt", "^[A-Z]+", 0), F.lit(" EMPTY")
-        )
-        if packed_kinds:
-            out = out.withColumn(
-                "c", clip_udf(bbox_deg)(F.when(border, F.col("geom")))
-            )
-            c_geom = F.col("c.clipped_geom")
-            c_area = F.col("c.clipped_area")
-            c_length = F.col("c.clipped_length")
-        else:
-            c_geom = F.lit(None).cast("binary")
-            c_area = c_length = F.lit(None).cast("double")
-        out = (
-            out.select(
-                "*",
-                F.when(~has_b | inside, F.col("geom"))
-                .when(outside, empty_geom)
-                .otherwise(c_geom)
-                .alias("clipped_geom"),
-                F.when(F.col("geom").isNull() & (~has_b | inside), F.col("wkt"))
-                .when(F.col("geom").isNull() & outside, empty_wkt)
-                .alias("clipped_wkt"),
-                F.when(~has_b | inside, F.col("area"))
-                .when(outside, F.lit(0.0))
-                .otherwise(c_area)
-                .alias("clipped_area"),
-                F.when(~has_b | inside, F.col("length"))
-                .when(outside, F.lit(0.0))
-                .otherwise(c_length)
-                .alias("clipped_length"),
-            )
-            .drop("c")
-        )
+        # bbox stage: the row stays iff its geometry clipped to the bbox is
+        # non-empty (CellIterator.java:417-459).  SINGLE PASS: the clip
+        # column is built once, after the geometry-build UDFs, so no
+        # filter/union branch re-executes the build subtree.
+        out = out.withColumn("__aoi", aoi_clip(bbox_deg, packed=packed_kinds))
         if not keep_empty:
-            out = out.filter(
-                ~is_empty_geom_cols(F.col("clipped_geom"), F.col("clipped_wkt"))
-            )
+            out = out.filter(~clip_is_empty(F.col("__aoi")))
+        if polygon is not None:
+            # a polygon keeps the rows that INTERSECT it (touching ones
+            # included, GeometrySplitter.java:120-137); the bbox-overlap
+            # gate keeps the exact test off rows that cannot
+            if not keep_empty:
+                cand = bbox_overlaps(bbox_deg)
+                hit = intersects_polygon_udf(polygon)(
+                    F.when(cand, F.col("geom")), F.when(cand, F.col("wkt"))
+                )
+                out = out.filter(cand & F.coalesce(hit, F.lit(False)))
+            out = out.withColumn("__aoi", aoi_clip(bbox_deg, polygon))
+    # output boundary: packed -> WKT exactly once, for surviving rows only.
+    # Node rows already carry their WKT.
+    to_wkt = to_wkt_udf() if packed_kinds or polygon is not None else None
     if packed_kinds:
-        # output boundary: packed -> WKT exactly once, for surviving rows
-        # only; identity-clipped rows reuse the unclipped string (binary
-        # equality is a JVM compare).  Node rows already carry both.
-        wudf_wkt = to_wkt_udf()
         out = out.withColumn(
-            "wkt", F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom")))
+            "wkt", F.coalesce(F.col("wkt"), to_wkt(F.col("geom")))
         )
-        if bbox_deg is not None:
-            out = out.withColumn(
-                "clipped_wkt",
-                F.coalesce(
-                    F.col("clipped_wkt"),
-                    F.when(F.col("clipped_geom") == F.col("geom"), F.col("wkt")),
-                    wudf_wkt(F.col("clipped_geom")),
-                ),
-            )
-    if not keep_bbox:
-        out = out.drop("minx", "miny", "maxx", "maxy")
-    return out
+    if bbox_deg is not None:
+        clip = F.col("__aoi")
+        out = out.select(
+            *[c for c in out.columns if c != "__aoi"],
+            # node rows keep a null clipped_geom (their clip is the WKT)
+            F.when(F.col("geom").isNotNull(), clip["clipped_geom"])
+            .alias("clipped_geom"),
+            clipped_wkt_col(clip, to_wkt).alias("clipped_wkt"),
+            clip["clipped_area"].alias("clipped_area"),
+            clip["clipped_length"].alias("clipped_length"),
+        )
+    return out.drop("minx", "miny", "maxx", "maxy")
 
 
 def relation_node_closure(entities: DataFrame) -> DataFrame:

@@ -405,3 +405,103 @@ def test_polygon_aoi_contribution_aliveness(moving_node_db):
     assert rows == {
         100: ["CREATION"], 200: ["DELETION"], 300: ["CREATION"]
     }
+
+
+# ---------------------------------------------------------------------------
+# AOI clip: both views clip through one stage (geometry_ops.aoi_clip)
+# ---------------------------------------------------------------------------
+
+TRI = {
+    "type": "Polygon",
+    "coordinates": [[[8.52, 49.24], [8.82, 49.24], [8.52, 49.54], [8.52, 49.24]]],
+}
+# non-convex: an L around the hot cell, so the general polygon clipper runs
+L_HOT = {
+    "type": "Polygon",
+    "coordinates": [[[8.55, 49.3], [8.8, 49.3], [8.8, 49.4], [8.67, 49.4],
+                     [8.67, 49.5], [8.55, 49.5], [8.55, 49.3]]],
+}
+HOT_BOX = (8.6, 49.33, 8.7, 49.42)
+
+
+@pytest.mark.parametrize("aoi", [{"bbox": HOT_BOX}, {"polygon": TRI}],
+                         ids=["bbox", "polygon"])
+def test_snapshot_clipped_geom_matches_clipped_wkt(db, aoi):
+    """clipped_geom and clipped_wkt hold the same clip; node rows carry a
+    null clipped_geom (their clip is the WKT)."""
+    from oshdb_spark.geometry.model import to_wkt, unpack_geometry
+
+    rows = (
+        SnapshotView.on(db).timestamps([TS[3]]).area_of_interest(**aoi)
+        .dataframe().select("type", "clipped_geom", "clipped_wkt").collect()
+    )
+    packed = [r for r in rows if r["type"] != "node"]
+    assert packed and len(packed) < len(rows)
+    assert all(r["clipped_geom"] is None for r in rows if r["type"] == "node")
+    for r in packed:
+        assert to_wkt(unpack_geometry(r["clipped_geom"])) == r["clipped_wkt"]
+
+
+def test_bbox_and_polygon_aoi_clip_stays_in_bbox(db):
+    """area_of_interest(bbox) + area_of_interest(polygon) combine by
+    intersection (CHANGELOG 1.2.0 "#512"): both views clip to bbox ∩
+    polygon, so no clipped geometry reaches past the bbox."""
+    from oshdb_spark.geometry.model import bounds, from_wkt
+
+    box = (8.52, 49.24, 8.69, 49.54)
+    views = [
+        SnapshotView.on(db).timestamps([TS[3]]),
+        ContributionView.on(db).timestamps(T0, T1),
+    ]
+    for view in views:
+        rows = (
+            view.filter("type:way").area_of_interest(bbox=box)
+            .area_of_interest(polygon=TRI).dataframe()
+            .select("clipped_wkt").collect()
+        )
+        assert rows
+        for r in rows:
+            b = bounds(from_wkt(r["clipped_wkt"]))
+            assert b is None or (
+                b[0] >= box[0] and b[1] >= box[1]
+                and b[2] <= box[2] and b[3] <= box[3]
+            ), r["clipped_wkt"]
+
+
+def _reference_clip(g, bbox=None, polygon=None):
+    """constructClippedGeometry (CellIterator.java:417-446) on one
+    geometry: inside -> as is, outside -> typed empty, border -> clip."""
+    from oshdb_spark.geometry.clip import clip_to_bbox
+    from oshdb_spark.geometry.model import bounds
+    from oshdb_spark.geometry.polyclip import PreparedPolygon, clip_to_polygon
+
+    if polygon is not None:
+        return clip_to_polygon(g, PreparedPolygon(polygon))
+    b = bounds(g)
+    if b is None or (b[0] >= bbox[0] and b[1] >= bbox[1]
+                     and b[2] <= bbox[2] and b[3] <= bbox[3]):
+        return g
+    if b[2] < bbox[0] or b[0] > bbox[2] or b[3] < bbox[1] or b[1] > bbox[3]:
+        return {"type": g["type"], "coordinates": []}
+    return clip_to_bbox(g, bbox)
+
+
+@pytest.mark.parametrize("aoi", [{"bbox": HOT_BOX}, {"polygon": L_HOT}],
+                         ids=["bbox", "polygon"])
+def test_contribution_clipped_wkt_is_the_rows_own_clip(db, aoi):
+    """Each contribution row's clipped_wkt is its OWN wkt clipped to the
+    AOI — not, say, the lagged previous state's clip."""
+    from oshdb_spark.geometry.model import from_wkt, to_wkt
+
+    rows = (
+        ContributionView.on(db).timestamps(T0, T1).area_of_interest(**aoi)
+        .dataframe().select("type", "wkt", "clipped_wkt").collect()
+    )
+    # the AOI cuts through some geometries
+    assert any(r["clipped_wkt"] != r["wkt"] and not r["clipped_wkt"].endswith(
+        " EMPTY") for r in rows)
+    for r in rows:
+        want = to_wkt(_reference_clip(from_wkt(r["wkt"]), aoi.get("bbox"),
+                                      aoi.get("polygon")))
+        # node WKT is built in the JVM: compare it in one formatting
+        assert to_wkt(from_wkt(r["clipped_wkt"])) == want, (r["type"], r["wkt"])

@@ -238,3 +238,49 @@ def test_assign_cells_plan_has_one_python_node_per_branch(
     # onto the entity versions) and 2 broadcasts (the way-expansion and
     # edge joins)
     assert plan.count("Exchange") == 7, plan[:3000]
+
+
+# ---------------------------------------------------------------------------
+# AOI plans: both views clip each row once, through geometry_ops.aoi_clip
+# ---------------------------------------------------------------------------
+
+AOI_BOX = (-180.0, -90.0, 0.0, 0.0)
+L_ZONE = {
+    "type": "Polygon",
+    "coordinates": [[[-180, -90], [180, -90], [180, 0], [0, 0],
+                     [0, 90], [-180, 90], [-180, -90]]],
+}
+
+
+def _python_and_exchanges(df) -> tuple[int, int]:
+    plan = _plan(df)
+    return plan.count("ArrowEvalPython"), plan.count("Exchange")
+
+
+@pytest.mark.parametrize(
+    "view, aoi, count, want",
+    [
+        # the way geometry, bbox clip and WKT rendering
+        ("snapshot", {"bbox": AOI_BOX}, False, (5, 3)),
+        # + the exact intersects test and the polygon clip
+        ("snapshot", {"polygon": L_ZONE}, False, (5, 3)),
+        # one clip serves aliveness, change detection and clipped_wkt
+        ("contribution", {"bbox": AOI_BOX}, False, (3, 11)),
+        ("contribution", {"polygon": L_ZONE}, False, (3, 11)),
+        # count() prunes the WKT rendering, not the clip
+        ("contribution", {"polygon": L_ZONE}, True, (2, 12)),
+    ],
+    ids=["snapshot-bbox", "snapshot-polygon", "contribution-bbox",
+         "contribution-polygon", "contribution-polygon-count"],
+)
+def test_aoi_plan_shapes(docs_db, view, aoi, count, want):
+    from oshdb_spark.api import ContributionView, SnapshotView
+
+    if view == "snapshot":
+        v = SnapshotView.on(docs_db).timestamps(SNAP_TS)
+    else:
+        v = ContributionView.on(docs_db).timestamps(SNAP_TS[0], SNAP_TS[-1])
+    df = v.filter("type:way").area_of_interest(**aoi).dataframe()
+    if count:
+        df = df.agg(F.count(F.lit(1)))
+    assert _python_and_exchanges(df) == want, _plan(df)[:4000]
