@@ -26,6 +26,7 @@ DataFrames (the reference's SortedMap).
 from __future__ import annotations
 
 import dataclasses
+import functools
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -51,7 +52,7 @@ from oshdb_spark.operators.aggregations import (
     zerofill,
 )
 from oshdb_spark.operators.contribution import contribution_view
-from oshdb_spark.operators.snapshot import snapshot_view
+from oshdb_spark.operators.snapshot import has_nested_relations, snapshot_view
 from oshdb_spark.timestamps import parse_iso, timestamps as make_timestamps
 
 
@@ -178,6 +179,18 @@ class OSHDB:
         ``None`` (default) disables the budget."""
         self.timeout_s = seconds
         return self
+
+    @functools.cached_property
+    def nested_relations(self) -> bool:
+        """Whether any relation in the table has a relation member: probed
+        once per handle (one job, on first use) and passed to every view
+        built on it.  A view's prefiltered entities are a subset of this
+        table, so a table without nested relations has none to resolve;
+        with some, the views take the nested-relation path, which also
+        builds plain relations correctly."""
+        return has_nested_relations(
+            self.entities.filter(F.col("type") == "relation")
+        )
 
     @classmethod
     def from_docs(
@@ -439,6 +452,13 @@ class _MapReducer:
         for node in self.state.filters:
             types = types & node.osm_types()
         return types
+
+    def _nested_relations(self) -> bool | None:
+        """The handle's nested-relation answer when the view builds
+        relations (None otherwise: nothing to probe)."""
+        if "relation" in self._type_set():
+            return self.db.nested_relations
+        return None
 
     def _entities(self) -> DataFrame:
         """Entities pruned to the narrowed type set PLUS member dependencies
@@ -804,6 +824,7 @@ class SnapshotView(_MapReducer):
             interpreter=self.db.interpreter,
             types=self._type_set(),
             polygon=_thaw(self.state.polygon),
+            nested_relations=self._nested_relations(),
         )
         df = self._attach_metric_columns(df)
         # version/geometry predicate on the UNCLIPPED state
@@ -858,6 +879,7 @@ class ContributionView(_MapReducer):
             attach_metrics=needs_metrics,
             bbox_deg=self.state.bbox_deg,
             polygon=_thaw(self.state.polygon),
+            nested_relations=self._nested_relations(),
         )
         for n in post_nodes:
             df = df.filter(n.osm_column())

@@ -37,6 +37,7 @@ from oshdb_spark.operators.aggregations import (
 from oshdb_spark.operators.contribution import contribution_view, squash_changesets
 from oshdb_spark.operators.snapshot import explode_snapshots
 from oshdb_spark.operators.tiling import xy_cell_id_col
+from oshdb_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # shared deterministic derivations (identical SQL text on both engines;
@@ -895,7 +896,8 @@ def q_generic_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
         return combine(state, part)
 
     cnt, s1, s2, mn, mx = mr.reduce(identity, acc, combine)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(cnt, s1, s2, mn, mx)],
         "cnt long, sum_id long, sum_id2 long, min_ts long, max_ts long",
     )
@@ -4163,7 +4165,8 @@ def q_cover_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's XYGridTest/XYGridTreeTest vectors)."""
     from oshdb_spark.operators.tiling import bbox_cover_ranges
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         _COVER_CASES,
         "bid long, minlon long, minlat long, maxlon long, maxlat long",
     )

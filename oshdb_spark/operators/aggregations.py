@@ -29,6 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from oshdb_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # timestamp bucketing
@@ -85,8 +88,14 @@ def zerofill(
     """Complete the result with identity rows for absent key combinations.
 
     keys: column -> full list of requested key values (cartesian across
-    columns, like the reference's combined-index zerofill).
+    columns, like the reference's combined-index zerofill).  Each key frame
+    takes the type of the result's own key column, so filling never widens
+    a key (an ``int`` column stays ``int``); an empty list fills nothing.
     fill: value column -> identity value (0 for counts/sums, None, ...).
+
+    The key frames are driver-side constants (``session.local_frame``,
+    the reference fills in driver memory, MapAggregator.java:880-889):
+    they plan as JVM local relations and start no Python worker.
 
     FULL join: zerofill only INSERTS identity rows for absent requested
     combinations (MapAggregator's insert-zerofill) — observed keys outside
@@ -95,23 +104,16 @@ def zerofill(
     """
     frames = None
     for col, values in keys.items():
-        kdf = spark.createDataFrame([(v,) for v in values], f"{col}: {_sql_type(values)}")
+        kdf = local_frame(
+            spark,
+            [(v,) for v in values],
+            StructType([StructField(col, result.schema[col].dataType)]),
+        )
         frames = kdf if frames is None else frames.crossJoin(kdf)
     out = frames.join(result, list(keys), "full")
     for col, identity in fill.items():
         out = out.withColumn(col, F.coalesce(F.col(col), F.lit(identity)))
     return out
-
-
-def _sql_type(values: list) -> str:
-    v = values[0]
-    if isinstance(v, bool):
-        return "boolean"
-    if isinstance(v, int):
-        return "long"
-    if isinstance(v, float):
-        return "double"
-    return "string"
 
 
 # ---------------------------------------------------------------------------

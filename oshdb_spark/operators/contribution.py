@@ -638,6 +638,7 @@ def classify_contributions(
     match_col: F.Column | None = None,
     bbox_deg: tuple[float, float, float, float] | None = None,
     polygon: dict | None = None,
+    types: set[str] | frozenset[str] | None = None,
 ) -> DataFrame:
     """lag() window + when/otherwise classification (CellIterator.java:586-726).
 
@@ -657,7 +658,14 @@ def classify_contributions(
     constructClippedGeometry's output (CellIterator.java:685-697), so a
     member moving entirely outside the AOI yields a contribution row with
     EMPTY activities; and the row's ``clipped_wkt`` output column.
+
+    ``types``: the entity kinds ``states`` holds (None: all three).
+    Without ``way`` and ``relation`` no row carries packed geometry, so
+    with no ``polygon`` the bbox clip and the WKT renders are Column
+    expressions only (nodes are never border rows) and no Python UDF is
+    planned, as in ``snapshot_view``.
     """
+    packed = types is None or bool(set(types) & {"way", "relation"})
     w = Window.partitionBy("type", "id").orderBy("event_ts")
     effective = F.col("visible") & ~is_empty_geom_cols(
         F.col("geom"), F.col("wkt")
@@ -670,7 +678,9 @@ def classify_contributions(
     gbin = F.coalesce(F.col("geom"), F.col("wkt").cast("binary"))
     aoi = bbox_deg is not None or polygon is not None
     if aoi:
-        states = states.withColumn("__clip", aoi_clip(bbox_deg, polygon))
+        states = states.withColumn(
+            "__clip", aoi_clip(bbox_deg, polygon, packed=packed)
+        )
         clip = F.col("__clip")
         effective = effective & ~clip_is_empty(clip)
         gbin = F.coalesce(
@@ -711,22 +721,27 @@ def classify_contributions(
     # invisible -> skip)
     out = out.filter(F.col("alive") | prev_alive)
     # output boundary: packed -> WKT exactly once, only for rows that
-    # survived classification (nodes keep their JVM-built strings)
-    wudf_wkt = to_wkt_udf()
+    # survived classification (nodes keep their JVM-built strings; a node
+    # the polygon clipper saw comes back packed)
+    wudf_wkt = to_wkt_udf() if packed or polygon is not None else None
+
+    def wkt_of(wkt_col: str, geom_col: str):
+        if not packed:
+            return F.col(wkt_col)
+        return F.coalesce(F.col(wkt_col), wudf_wkt(F.col(geom_col)))
+
     out = out.select(
         "doc_id", "type", "id", "version", "visible", "tags",
         F.col("event_ts").alias("ts"),
         F.col("event_changeset").alias("changeset"),
         F.col("event_uid").alias("contrib_uid"),
         "own_change", "contrib_types",
-        F.coalesce(F.col("wkt"), wudf_wkt(F.col("geom"))).alias("wkt"),
+        wkt_of("wkt", "geom").alias("wkt"),
         # packed geometry rides along (null for nodes) so downstream AOI
         # clip stages decode bytes instead of re-parsing WKT
         "geom",
         "area", "length",
-        F.coalesce(
-            F.col("prev_wkt"), wudf_wkt(F.col("prev_geom"))
-        ).alias("prev_wkt"),
+        wkt_of("prev_wkt", "prev_geom").alias("prev_wkt"),
         "prev_tags", "prev_version",
         # geometry bbox (null for empty): lets consumers classify against
         # an AOI JVM-side and invoke Python clip UDFs on border rows only
@@ -770,6 +785,7 @@ def contribution_view(
     attach_metrics: bool = False,
     bbox_deg: tuple[float, float, float, float] | None = None,
     polygon: dict | None = None,
+    nested_relations: bool | None = None,
 ) -> DataFrame:
     """The full contribution view over [t_start, t_end].
 
@@ -792,6 +808,11 @@ def contribution_view(
     ``snapshot_view`` takes.  It participates in aliveness and change
     detection (see ``classify_contributions``) and adds ``clipped_wkt``,
     each row's geometry clipped to the AOI.
+
+    ``nested_relations``: whether any relation in ``entities`` (or in a
+    superset of it) has a relation member; None probes the relation
+    subset (one eager job, only when ``relation`` is in ``types``).
+    ``OSHDB`` handles probe their full table once and pass the answer.
     """
     if types is None:
         types = {"node", "way", "relation"}
@@ -813,7 +834,10 @@ def contribution_view(
             # super-relations trigger one level of nested member resolution
             rs = _relation_states(
                 events, rels, ways, nodes, interpreter,
-                resolve_nested=has_nested_relations(rels),
+                resolve_nested=(
+                    has_nested_relations(rels)
+                    if nested_relations is None else nested_relations
+                ),
                 include_old_style=include_old_style_multipolygons,
             )
             states = rs if states is None else states.unionByName(rs)
@@ -831,7 +855,8 @@ def contribution_view(
                   "g_squareness"):
             states = states.withColumn(c, m[c])
     classified = classify_contributions(
-        states, match_col=osm_filter, bbox_deg=bbox_deg, polygon=polygon
+        states, match_col=osm_filter, bbox_deg=bbox_deg, polygon=polygon,
+        types=types,
     )
     # half-open [t_start, t_end): OSHDBTimestampInterval.includes is
     # from <= t < to, so a contribution at exactly t_end is excluded

@@ -9,18 +9,20 @@ Plan shape (2 Spark jobs total, no iteration over the data):
   1. histogram: ``groupBy(cx, cy).count()`` — at the working zoom the grid
      has at most ``2^zoom * 2^(zoom-1)`` cells, and only non-empty cells
      materialize, so the collected histogram is tiny even when the point
-     table is huge (at 10^12 points pick a coarser zoom or aggregate the
-     histogram a second time; the bound math below is zoom-independent).
+     table is huge.  The collect is capped (``HISTOGRAM_CAP``); past the
+     cap the histogram is taken again at a coarser zoom (the bound math
+     below is zoom-independent).
   2. on the driver, for every query: sort the non-empty cells by planar
      Chebyshev cell distance rho, take the smallest r_inner whose
      cumulative count reaches k — every one of those points lies within
      planar distance (r_inner + 1) * w * sqrt(2).  Any point in an
      unscanned cell at ring >= R+1 is at distance >= R * w, so scanning
      ring R = ceil(sqrt(2) * (r_inner + 1)) guarantees the exact top-k.
-  3. one broadcast hash join of the (small) per-query candidate-cell set
-     against the points, then a window rank per query.  The points never
-     shuffle for the join (broadcast side is the ring set); the only
-     shuffle is the per-qid top-k window over the bounded candidate set.
+  3. one broadcast hash join of the (small) per-query candidate-cell set,
+     a JVM local relation built on the driver, against the points, then a
+     window rank per query.  The points never shuffle for the join
+     (broadcast side is the ring set); the only shuffle is the per-qid
+     top-k window over the bounded candidate set.
 
 The distance metric is planar squared degrees computed with the exact same
 IEEE-double expression the oracle SQL uses (no anti-meridian wrap in the
@@ -35,8 +37,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from oshdb_spark.session import local_frame
+
 _OSM_180 = 1_800_000_000
 _OSM_90 = 900_000_000
+# most histogram cells knn_join collects to the driver (zoom 12 fills
+# 2^12 * 2^11 = 8.4M cells; zoom 6, the default, at most 2048)
+HISTOGRAM_CAP = 1_000_000
 
 
 def _cell_xy(zoom: int, lon: F.Column, lat: F.Column) -> tuple[F.Column, F.Column]:
@@ -65,6 +72,25 @@ def _cell_xy_py(zoom: int, lon_fp: int, lat_fp: int) -> tuple[int, int]:
     return int(math.floor(lon_s / w)), int(math.floor(lat_s / w))
 
 
+def _cell_histogram(
+    points: DataFrame, zoom: int, cap: int
+) -> tuple[int, list[tuple[int, int, int]]]:
+    """(zoom, [(cx, cy, n)]): the non-empty cell histogram, collected at
+    ``zoom`` or, past ``cap`` cells, at the coarsest zoom whose histogram
+    fits (each retry halves the cell side; zoom 0 has at most 2 cells)."""
+    while True:
+        x_col, y_col = _cell_xy(zoom, F.col("lon_fp"), F.col("lat_fp"))
+        rows = (
+            points.groupBy(x_col.alias("cx"), y_col.alias("cy"))
+            .agg(F.count("*").alias("n"))
+            .limit(cap + 1)
+            .collect()
+        )
+        if len(rows) <= cap or zoom == 0:
+            return zoom, [(r["cx"], r["cy"], r["n"]) for r in rows]
+        zoom -= 1
+
+
 def knn_join(
     spark: SparkSession,
     points: DataFrame,
@@ -77,19 +103,21 @@ def knn_join(
     points: DataFrame with (event_id, lon_fp, lat_fp) fixed-point coords.
     queries: [(qid, qlon_fp, qlat_fp), ...] — small, driver-side.
     Returns (qid, neighbor_id, rank), rank 1..k.
+
+    The driver collects at most ``HISTOGRAM_CAP`` histogram cells: past
+    it, the histogram is taken again at a coarser zoom (the exactness
+    bound holds at any zoom; a coarser grid only scans more candidates).
+    The ring and query sets reach the plan as driver-side constants
+    (``session.local_frame``), so the join starts no Python worker.
     """
+    # job 1: non-empty cell histogram (bounded by the grid size and the cap)
+    zoom, hist = _cell_histogram(points, zoom, HISTOGRAM_CAP)
     nx = 1 << zoom
     cell_w_deg = 360.0 / nx
     x_col, y_col = _cell_xy(zoom, F.col("lon_fp"), F.col("lat_fp"))
     pts = points.select(
         "event_id", "lon_fp", "lat_fp", x_col.alias("cx"), y_col.alias("cy")
     )
-
-    # job 1: non-empty cell histogram (bounded by the grid size, not the data)
-    hist = [
-        (r["cx"], r["cy"], r["n"])
-        for r in pts.groupBy("cx", "cy").agg(F.count("*").alias("n")).collect()
-    ]
 
     # driver-side: per query, the exact safe scan radius
     ring_rows: list[tuple[int, int, int]] = []
@@ -112,9 +140,9 @@ def knn_join(
             if max(min(dx, nx - dx), abs(hy - cqy)) <= r_scan:
                 ring_rows.append((qid, hx, hy))
 
-    ring_df = spark.createDataFrame(ring_rows, "qid int, cx long, cy long")
-    qdf = spark.createDataFrame(
-        [(q, x, y) for q, x, y in queries], "qid int, qlon long, qlat long"
+    ring_df = local_frame(spark, ring_rows, "qid int, cx long, cy long")
+    qdf = local_frame(
+        spark, [(q, x, y) for q, x, y in queries], "qid int, qlon long, qlat long"
     )
 
     # job 2: broadcast candidate-cell join + per-query top-k

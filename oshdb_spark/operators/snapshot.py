@@ -56,6 +56,7 @@ from oshdb_spark.operators.geometry_ops import (
     to_wkt_udf,
     way_geometry_udf,
 )
+from oshdb_spark.session import local_frame
 
 ENTITY_KEY = ["type", "id"]
 
@@ -233,8 +234,8 @@ def _relation_nesting_levels(rels: DataFrame):
             for pid in pending:
                 level[pid] = max_lvl
     spark = rels.sparkSession
-    levels_df = spark.createDataFrame(
-        [(int(i), int(lv)) for i, lv in level.items()], "id long, __lvl int"
+    levels_df = local_frame(
+        spark, [(int(i), int(lv)) for i, lv in level.items()], "id long, __lvl int"
     )
     return levels_df, max_lvl
 
@@ -380,6 +381,7 @@ def _relation_snapshots(
     timestamps: list[int],
     interpreter: TagInterpreter | None,
     include_old_style_multipolygons: bool,
+    nested_relations: bool | None,
 ) -> DataFrame:
     """Relation output rows (packed geometry) of :func:`snapshot_view`."""
     rudf = relation_geometry_udf(interpreter)
@@ -404,7 +406,9 @@ def _relation_snapshots(
     # built last, their in-cycle members resolve to whatever exists —
     # partial geometry instead of a crash.
     rels = entities.filter(F.col("type") == "relation")
-    if not has_nested_relations(rels):
+    if nested_relations is None:
+        nested_relations = has_nested_relations(rels)
+    if not nested_relations:
         rels_out = _build_rels(rl)
     else:
         levels_df, max_lvl = _relation_nesting_levels(rels)
@@ -483,6 +487,7 @@ def snapshot_view(
     include_old_style_multipolygons: bool = False,
     types: set[str] | frozenset[str] | None = None,
     polygon: dict | None = None,
+    nested_relations: bool | None = None,
 ) -> DataFrame:
     """The snapshot view over the entity kinds in ``types``.
 
@@ -523,6 +528,10 @@ def snapshot_view(
     - the empty set gives an empty frame with the full schema.
 
     The result equals the all-types result filtered to ``type in types``.
+
+    ``nested_relations``: whether any relation in ``entities`` (or in a
+    superset of it) has a relation member; None runs the probe above.
+    ``OSHDB`` handles probe their full table once and pass the answer.
     """
     types = frozenset({"node", "way", "relation"} if types is None else types)
     packed_kinds = bool(types & {"way", "relation"})
@@ -554,7 +563,7 @@ def snapshot_view(
             parts.append(
                 _relation_snapshots(
                     entities, wl, node_snaps, timestamps, interpreter,
-                    include_old_style_multipolygons,
+                    include_old_style_multipolygons, nested_relations,
                 )
             )
     if not parts:

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oshdb_spark.session import local_frame
+
 
 def token_count_col(text_col: str = "text"):
     """Whitespace token count via character arithmetic (exact for
@@ -278,8 +280,8 @@ def ngram_decontaminate(
     corpus).  The corpus is never shuffled whole.
     """
     spark = docs.sparkSession
-    probes = spark.createDataFrame(
-        [(g,) for g in sorted(set(probe_grams))], "gram string"
+    probes = local_frame(
+        spark, [(g,) for g in sorted(set(probe_grams))], "gram string"
     )
     toks = F.split(F.col(text_col), sep)
     e = docs.filter(F.size(toks) >= n).select(

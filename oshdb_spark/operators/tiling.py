@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from oshdb_spark.grid.quadcell import quadcell_id_vec
 from oshdb_spark.grid.xygrid import MAXZOOM, XYGridTree, xy_insert_cell_vec
+from oshdb_spark.session import local_frame
 
 _OSM_180 = 1_800_000_000
 _OSM_90 = 900_000_000
@@ -554,7 +555,7 @@ def query_cells_df(
         if start >= 0
         for cid in range(start, end + 1)
     ]
-    return spark.createDataFrame(rows, "cell_zoom int, cell_id long")
+    return local_frame(spark, rows, "cell_zoom int, cell_id long")
 
 
 def cell_count_pyramid(
@@ -959,8 +960,8 @@ def join_count_stats(
         .groupBy("pair_class")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     )
-    zero = points.sparkSession.createDataFrame(
-        [("BB",), ("BW",), ("WW",)], "pair_class string"
+    zero = local_frame(
+        points.sparkSession, [("BB",), ("BW",), ("WW",)], "pair_class string"
     )
     return zero.join(counted, "pair_class", "left").select(
         "pair_class",

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oshdb_spark.session import local_frame
+
 
 def zonal_rect_aggregate(
     spark: SparkSession,
@@ -43,8 +45,9 @@ def zonal_rect_aggregate(
     Zones with no points still appear (zerofill): aggregates must be
     null-tolerant (F.count(col) / countDistinct give 0).
     """
-    zdf = spark.createDataFrame(
-        zones, "zone_key string, minlon long, minlat long, maxlon long, maxlat long"
+    zdf = local_frame(
+        spark, zones,
+        "zone_key string, minlon long, minlat long, maxlon long, maxlat long",
     )
     cond = (
         (F.col(lon_col) >= F.col("minlon"))
@@ -244,7 +247,7 @@ def zonal_polygon_aggregate(
     )
     agged = tagged.groupBy("zone_key").agg(*aggs)
     # zerofill absent zones
-    zdf = spark.createDataFrame([(k,) for k in zone_keys], "zone_key string")
+    zdf = local_frame(spark, [(k,) for k in zone_keys], "zone_key string")
     out = zdf.join(agged, "zone_key", "left")
     for c in agged.columns:
         if c != "zone_key":
@@ -342,10 +345,10 @@ def raster_zonal_aggregate(
         for key, poly in zones
         for cid, frac in polygon_cell_cover(poly, zoom)
     ]
-    cdf = spark.createDataFrame(
-        cover, f"zone_key string, {cell_col} long, coverage double"
+    cdf = local_frame(
+        spark, cover, f"zone_key string, {cell_col} long, coverage double"
     )
-    zdf = spark.createDataFrame([(k,) for k, _ in zones], "zone_key string")
+    zdf = local_frame(spark, [(k,) for k, _ in zones], "zone_key string")
     joined = raster.join(F.broadcast(cdf), cell_col)
     per_zone = joined.groupBy("zone_key").agg(*aggs)
     return F.broadcast(zdf).join(per_zone, "zone_key", "left")

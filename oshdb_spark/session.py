@@ -6,7 +6,8 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def ensure_package_on_workers(spark: SparkSession | None = None) -> None:
@@ -43,6 +44,36 @@ def ensure_package_on_workers(spark: SparkSession | None = None) -> None:
                         z.write(full, rel)
     sc.addPyFile(zpath)
     sc._oshdb_spark_shipped = True
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """A small driver-side constant frame, planned as a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``Scan ExistingRDD``
+    over a PythonRDD, so every execution of the query starts Python
+    worker tasks just to unpickle the rows.  Here the rows become a
+    ``pyarrow.Table`` typed from ``schema`` (a DDL string or a
+    StructType) and cross to the JVM once, when the frame is built, as a
+    ``LocalRelation``; PySpark takes that Arrow path for a table whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.  Rows are tuples
+    in field order; values are checked against the field types (an int
+    out of an ``int`` column's range raises), as ``createDataFrame`` does.
+    This is the engine's one constructor of list-backed frames.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oshdb_spark.filters.dsl import TagTranslator
+from oshdb_spark.session import local_frame
 
 
 def build_keytables(
@@ -57,10 +58,11 @@ def build_keytables(
 def keytable_frames(spark, translator: TagTranslator):
     """The keytables as two small DataFrames (broadcast dimensions) —
     the columnar `key` / `keyvalue` tables (TableNames.java:7-60)."""
-    keys = spark.createDataFrame(
-        [(k, i) for k, i in translator.keys.items()], "key string, key_id int"
+    keys = local_frame(
+        spark, list(translator.keys.items()), "key string, key_id int"
     )
-    vals = spark.createDataFrame(
+    vals = local_frame(
+        spark,
         [(k, v, i) for (k, v), i in translator.values.items()],
         "key string, value string, value_id int",
     )

@@ -25,6 +25,7 @@ from oshdb_spark.operators.tiling import (
     segment_cell_cover,
 )
 from oshdb_spark.operators.zonal import raster_focal_sum
+from oshdb_spark.session import local_frame
 
 
 def _plan(df) -> str:
@@ -42,10 +43,13 @@ def _points(spark, n=50):
 
 
 def _no_python(plan: str) -> bool:
+    # a `Scan ExistingRDD` over a list-backed frame runs Python worker
+    # tasks too (they unpickle its rows)
     return (
         "BatchEvalPython" not in plan
         and "ArrowEvalPython" not in plan
         and "MapInPandas" not in plan
+        and "ExistingRDD" not in plan
     )
 
 
@@ -78,7 +82,8 @@ def test_jvm_only_operators_have_no_python_nodes(spark):
             7,
         ),
         relation_node_closure(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     ("way", 1, [10, 11], None),
                     (
@@ -204,6 +209,78 @@ def test_snapshot_build_starts_no_job(spark, docs_db, filt):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == []
+
+
+def test_node_contribution_bbox_plan_is_jvm_only(docs_db):
+    from oshdb_spark.api import ContributionView
+
+    view = (
+        ContributionView.on(docs_db).timestamps(SNAP_TS[0], SNAP_TS[-1])
+        .filter("type:node").area_of_interest(bbox=SNAP_BOX)
+    )
+    for df in (view.dataframe(), view.aggregate_by_timestamp().count()):
+        plan = _plan(df)
+        # nodes are never border rows: the clip and every WKT render are
+        # Column expressions
+        assert _no_python(plan), plan[:3000]
+
+
+def test_node_contribution_bbox_equals_all_types_path(docs_db):
+    from oshdb_spark.operators.contribution import contribution_view
+
+    def rows(types):
+        df = contribution_view(
+            docs_db.entities, SNAP_TS[0], SNAP_TS[-1], types=types,
+            bbox_deg=SNAP_BOX,
+        ).filter("type = 'node'")
+        return sorted(tuple(map(str, r)) for r in df.collect())
+
+    narrowed = rows({"node"})
+    assert narrowed and narrowed == rows(None)
+
+
+def test_zonal_and_knn_constant_frames_are_local(spark, docs_db):
+    from oshdb_spark.operators.knn import knn_join
+
+    zones = {
+        "west": {"type": "Polygon", "coordinates": [
+            [[-180, -90], [0, -90], [0, 90], [-180, 90], [-180, -90]]]},
+        "east": {"type": "Polygon", "coordinates": [
+            [[0, -90], [180, -90], [180, 90], [0, 90], [0, -90]]]},
+    }
+    zonal = _plan(
+        _snapshot(docs_db, "type:node", bbox=None)
+        .aggregate_by_geometry(zones).count()
+    )
+    # the zone match is a Python UDF; the zone key frame is not
+    assert "ExistingRDD" not in zonal and "LocalTableScan" in zonal, zonal[:3000]
+    knn = _plan(knn_join(spark, _points(spark), [(1, 0, 0), (2, 10, 10)], k=3))
+    assert _no_python(knn) and "LocalTableScan" in knn, knn[:3000]
+
+
+@pytest.mark.parametrize("view", ["snapshot", "contribution"])
+def test_nested_relation_probe_runs_once_per_handle(spark, docs_parquet, view):
+    from oshdb_spark.api import OSHDB, ContributionView, SnapshotView
+
+    db = OSHDB.from_docs(spark, spark.read.parquet(docs_parquet[0]))
+    sc = spark.sparkContext
+
+    def build_jobs(k: int) -> list:
+        group = f"plan-shape-nested-{view}-{k}"
+        sc.setJobGroup(group, "view DataFrame build")
+        try:
+            if view == "snapshot":
+                SnapshotView.on(db).timestamps(SNAP_TS).dataframe()
+            else:
+                (ContributionView.on(db).timestamps(SNAP_TS[0], SNAP_TS[-1])
+                 .dataframe())
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    assert build_jobs(1) != []  # the handle's one probe
+    assert build_jobs(2) == []
 
 
 # ---------------------------------------------------------------------------
