@@ -23,8 +23,15 @@ OSHEntityTimeUtils (osh/OSHEntityTimeUtils.java:46-192):
     changed at that exact timestamp, else the user of the member-child
     modification (OSMContributionImpl.java:126-160).
 
-All heavy steps are DataFrame ops: as-of resolution is an equi-join +
-window dedup; classification is lag() + when/otherwise.
+All heavy steps are DataFrame ops, keyed so that one ``(type, id)``
+exchange per kind serves every per-owner step: the event dedup and the
+changeset squash, the owner's as-of version, the per-state groups and
+the classification window.  Member geometry is resolved in one probe
+pass per kind, the way an ``OSHEntity`` carries its members' histories
+(PAPER.md §1.1-1.2): each state's node refs — for a relation, its member
+ways' refs as of the event, or the member node itself — meet the node
+history in one as-of join (:func:`_asof_nodes`) and are grouped back per
+member and per state.  Classification is lag() + when/otherwise.
 """
 
 from __future__ import annotations
@@ -37,8 +44,10 @@ from oshdb_spark.operators.geometry_ops import (
     aoi_clip,
     clip_is_empty,
     clipped_wkt_col,
+    holes_only_udf,
     is_empty_geom_cols,
     node_geometry_cols,
+    old_style_flag_udf,
     relation_geometry_udf,
     to_wkt_udf,
     way_geometry_udf,
@@ -47,44 +56,97 @@ from oshdb_spark.operators.snapshot import has_nested_relations, with_validity
 
 CONTRIB_TYPES = ["CREATION", "DELETION", "TAG_CHANGE", "GEOMETRY_CHANGE"]
 
+OWNER = ["type", "id"]
+EVENT_COLS = [*OWNER, "event_ts", "event_changeset", "event_uid", "own_change"]
+# one row per (type, id, event_ts): the owner's state at each event
+STATE_COLS = [*EVENT_COLS, "doc_id", "version", "visible"]
+GEOM_COLS = ["geom", "area", "length", "minx", "miny", "maxx", "maxy"]
+
 
 # ---------------------------------------------------------------------------
-# as-of resolution helper
+# as-of resolution
 # ---------------------------------------------------------------------------
 
 
-def asof_resolve(
-    targets: DataFrame,
-    versions: DataFrame,
-    key: str,
-    ts_col: str,
-    version_key: str = "id",
-) -> DataFrame:
-    """For each (targets.key, targets.ts) pick the newest version row with
-    version.ts <= ts (OSHEntities.getByTimestamp, osh/OSHEntities.java:60-75).
-
-    Equi-join on the key + window row_number dedup — the standard Spark
-    as-of join shape (one shuffle on the key each side).
-    Version columns are prefixed with `v_`.
-    """
-    v = versions.select(
-        F.col(version_key).alias(key),
-        *[
-            F.col(c).alias(f"v_{c}")
-            for c in versions.columns
-            if c != version_key
-        ],
-    )
-    joined = targets.join(v, key, "left").filter(
-        F.col("v_ts").isNull() | (F.col("v_ts") <= F.col(ts_col))
-    )
-    w = Window.partitionBy(*targets.columns).orderBy(
-        F.col("v_ts").desc_nulls_last(), F.col("v_version").desc_nulls_last()
+def _newest(df: DataFrame, key: list[str], ts_col: str, version_col: str):
+    """One row per ``key``: the one with the newest (ts, version); a left
+    join's unmatched row (null ts) survives as the only row."""
+    w = Window.partitionBy(*key).orderBy(
+        F.col(ts_col).desc_nulls_last(), F.col(version_col).desc_nulls_last()
     )
     return (
-        joined.withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def asof_resolve(targets: DataFrame, versions: DataFrame, ts_col: str):
+    """For each ``targets`` row (an owner ``(type, id)`` and a timestamp
+    ``ts_col``) the newest version with version.ts <= ts
+    (OSHEntities.getByTimestamp, osh/OSHEntities.java:60-75), or nulls.
+
+    A left join on ``(type, id)`` with the as-of bound in its condition,
+    then a window dedup partitioned by the target's columns: a target
+    already partitioned by owner is not shuffled again.  Version columns
+    are prefixed with ``v_``.
+    """
+    v = versions.select(
+        F.col("type").alias("__v_type"),
+        F.col("id").alias("__v_id"),
+        *[F.col(c).alias(f"v_{c}") for c in versions.columns if c not in OWNER],
+    )
+    joined = targets.join(
+        v,
+        (F.col("type") == F.col("__v_type"))
+        & (F.col("id") == F.col("__v_id"))
+        & (F.col("v_ts") <= F.col(ts_col)),
+        "left",
+    ).drop("__v_type", "__v_id")
+    return _newest(joined, targets.columns, "v_ts", "v_version")
+
+
+def _asof_nodes(probes: DataFrame, nodes: DataFrame, key: list[str]):
+    """Each probe row (unique per ``key``, with ``event_ts`` and a node id
+    ``pref``) + that node's version as of ``event_ts``: ``n_visible``,
+    ``n_lon``, ``n_lat`` in degrees, null when the node has no version
+    yet.  The one node as-of join of both the way and the relation
+    branch; its dedup window leads with ``pref``, so it reuses the join's
+    partitioning whichever side was shuffled."""
+    node_v = nodes.select(
+        F.col("id").alias("__n_id"),
+        F.col("ts").alias("__n_ts"),
+        F.col("version").alias("__n_version"),
+        F.col("visible").alias("n_visible"),
+        (F.col("lon").cast("double") / 1e7).alias("n_lon"),
+        (F.col("lat").cast("double") / 1e7).alias("n_lat"),
+    )
+    j = probes.join(
+        node_v,
+        (F.col("pref") == F.col("__n_id")) & (F.col("__n_ts") <= F.col("event_ts")),
+        "left",
+    )
+    return _newest(j, ["pref", *key], "__n_ts", "__n_version").drop(
+        "__n_id", "__n_ts", "__n_version"
+    )
+
+
+def _probe_list():
+    """The resolved probes of one group, in ref order."""
+    return F.array_sort(
+        F.collect_list(
+            F.struct("ppos", F.col("pref").alias("nid"), "n_visible", "n_lon", "n_lat")
+        )
+    ).alias("pline")
+
+
+def _node_line(pline):
+    """array<struct<nid, lon, lat>>: the visible nodes of a probe list."""
+    return F.transform(
+        F.filter(pline, lambda p: p["n_visible"].isNotNull() & p["n_visible"]),
+        lambda p: F.struct(
+            p["nid"].alias("nid"), p["n_lon"].alias("lon"), p["n_lat"].alias("lat")
+        ),
     )
 
 
@@ -101,75 +163,42 @@ def _own_events(versions: DataFrame) -> DataFrame:
         F.col("changeset").alias("event_changeset"),
         F.col("uid").alias("event_uid"),
         F.lit(True).alias("own_change"),
+        F.array().cast("array<bigint>").alias("event_src"),
     )
 
 
-def _member_events_for_ways(ways: DataFrame, node_events: DataFrame) -> DataFrame:
-    """Node modification events mapped into the validity window of each way
-    version that references the node (collectMembershipTimeIntervals)."""
-    intervals = (
-        with_validity(ways)
-        .select(
-            "id", F.col("ts").alias("w_start"), "next_ts",
-            F.explode("refs").alias("ref"),
-        )
-        .distinct()
+def _member_events(owners, members, child_events, kind: str) -> DataFrame:
+    """Child modification events mapped into the validity window of each
+    owner version that references the child (collectMembershipTimeIntervals).
+    ``members``: the (mtype, ref) pairs of an owner version; a member
+    listed twice yields duplicate events, which the event dedup drops.
+    ``event_src`` is the chain of member ids the event came through."""
+    intervals = with_validity(owners).select(
+        "id", F.col("ts").alias("o_start"), "next_ts",
+        F.explode(F.array_distinct(members)).alias("m"),
+    ).select(
+        "id", "o_start", "next_ts",
+        F.col("m.mtype").alias("mtype"), F.col("m.ref").alias("ref"),
     )
-    ne = node_events.select(
-        F.col("id").alias("ref"),
-        F.col("event_ts"),
-        F.col("event_changeset"),
-        F.col("event_uid"),
-    )
-    ev = intervals.join(ne, "ref", "inner").filter(
-        (F.col("event_ts") > F.col("w_start"))
+    ev = intervals.join(child_events, ["mtype", "ref"], "inner").filter(
+        (F.col("event_ts") > F.col("o_start"))
         & (F.col("next_ts").isNull() | (F.col("event_ts") < F.col("next_ts")))
     )
     return ev.select(
-        F.lit("way").alias("type"),
+        F.lit(kind).alias("type"),
         "id",
         "event_ts",
         "event_changeset",
         "event_uid",
         F.lit(False).alias("own_change"),
+        F.concat(F.array("ref"), "event_src").alias("event_src"),
     )
 
 
-def _member_events_for_relations(
-    rels: DataFrame, way_events: DataFrame, node_events: DataFrame
-) -> DataFrame:
-    intervals = (
-        with_validity(rels)
-        .select(
-            "id", F.col("ts").alias("r_start"), "next_ts",
-            F.explode("members").alias("m"),
-        )
-        .select(
-            "id", "r_start", "next_ts",
-            F.col("m.type").alias("mtype"), F.col("m.ref").alias("ref"),
-        )
-        .distinct()
-    )
-    child = way_events.select(
-        F.lit("way").alias("mtype"), F.col("id").alias("ref"),
-        "event_ts", "event_changeset", "event_uid",
-    ).unionByName(
-        node_events.select(
-            F.lit("node").alias("mtype"), F.col("id").alias("ref"),
-            "event_ts", "event_changeset", "event_uid",
-        )
-    )
-    ev = intervals.join(child, ["mtype", "ref"], "inner").filter(
-        (F.col("event_ts") > F.col("r_start"))
-        & (F.col("next_ts").isNull() | (F.col("event_ts") < F.col("next_ts")))
-    )
-    return ev.select(
-        F.lit("relation").alias("type"),
-        "id",
-        "event_ts",
-        "event_changeset",
-        "event_uid",
-        F.lit(False).alias("own_change"),
+def _as_child(events: DataFrame) -> DataFrame:
+    return events.select(
+        F.col("type").alias("mtype"), F.col("id").alias("ref"),
+        "event_ts", "event_changeset", "event_uid", "event_src",
     )
 
 
@@ -182,26 +211,48 @@ def modification_events(entities: DataFrame) -> DataFrame:
     rels = entities.filter(F.col("type") == "relation")
 
     node_ev = _own_events(nodes)
-    way_ev = _own_events(ways).unionByName(_member_events_for_ways(ways, node_ev))
+    way_refs = F.transform(
+        "refs", lambda r: F.struct(F.lit("node").alias("mtype"), r.alias("ref"))
+    )
+    way_ev = _own_events(ways).unionByName(
+        _member_events(ways, way_refs, _as_child(node_ev), "way")
+    )
+    rel_members = F.transform(
+        "members", lambda m: F.struct(m["type"].alias("mtype"), m["ref"].alias("ref"))
+    )
     rel_ev = _own_events(rels).unionByName(
-        _member_events_for_relations(rels, way_ev, node_ev)
+        _member_events(
+            rels, rel_members,
+            _as_child(way_ev).unionByName(_as_child(node_ev)), "relation",
+        )
     )
     all_ev = node_ev.unionByName(way_ev).unionByName(rel_ev)
-    # dedup (type,id,ts): own changes win (contributorUserId semantics)
-    w = Window.partitionBy("type", "id", "event_ts").orderBy(
-        F.col("own_change").desc(), F.col("event_changeset").desc()
+    # dedup (type, id, ts): own changes win (contributorUserId semantics),
+    # then the newest changeset, then the member with the largest id
+    # chain (so simultaneous member edits attribute deterministically);
+    # the first row of each timestamp in this (type, id) order, so the
+    # squash window after it reuses the same exchange
+    w = Window.partitionBy(*OWNER).orderBy(
+        "event_ts", F.col("own_change").desc(), F.col("event_changeset").desc(),
+        F.col("event_src").desc(),
     )
+    return _first_per_ts(all_ev, w, "event_ts").drop("event_src")
+
+
+def _first_per_ts(df: DataFrame, w, ts_col: str) -> DataFrame:
+    """The first row of each ``ts_col`` value in window order ``w``."""
+    prev = F.lag(ts_col).over(w)
     return (
-        all_ev.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn")
+        df.withColumn("__prev_ts", prev)
+        .filter(F.col("__prev_ts").isNull() | (F.col("__prev_ts") != F.col(ts_col)))
+        .drop("__prev_ts")
     )
 
 
 def squash_changesets(events: DataFrame) -> DataFrame:
     """Collapse consecutive same-changeset events to the run's last event
     (OSHEntityTimeUtils.java:144-160)."""
-    w = Window.partitionBy("type", "id").orderBy("event_ts")
+    w = Window.partitionBy(*OWNER).orderBy("event_ts")
     nxt = F.lead("event_changeset").over(w)
     return events.withColumn("__next_cs", nxt).filter(
         F.col("__next_cs").isNull() | (F.col("event_changeset") != F.col("__next_cs"))
@@ -222,23 +273,18 @@ def _node_states_direct(nodes: DataFrame, squash: bool = True) -> DataFrame:
     each event timestamp" is the identity.  We only need the same-timestamp
     dedup (attribution keeps the max-changeset event, the state keeps the
     max-version row — mirroring modification_events + asof_resolve tie
-    breaks) and the changeset squash, both single-window passes.
+    breaks) and the changeset squash: windows over one ``(type, id)``
+    exchange.
     """
-    w_ts = Window.partitionBy("id", "ts")
-    d = (
-        nodes.withColumn(
-            "__rn",
-            F.row_number().over(w_ts.orderBy(F.col("version").desc())),
-        )
-        .withColumn("event_changeset", F.max("changeset").over(w_ts))
-        .withColumn(
-            "event_uid", F.max_by(F.col("uid"), F.col("changeset")).over(w_ts)
-        )
-        .filter("__rn = 1")
-        .drop("__rn")
+    peers = Window.partitionBy(*OWNER).orderBy("ts").rangeBetween(0, 0)
+    d = _first_per_ts(
+        nodes.withColumn("event_changeset", F.max("changeset").over(peers))
+        .withColumn("event_uid", F.max_by("uid", "changeset").over(peers)),
+        Window.partitionBy(*OWNER).orderBy("ts", F.col("version").desc()),
+        "ts",
     )
     ev = d.select(
-        F.lit("node").alias("type"),
+        "type",
         "id",
         F.col("ts").alias("event_ts"),
         "event_changeset",
@@ -256,8 +302,7 @@ def _node_states_direct(nodes: DataFrame, squash: bool = True) -> DataFrame:
     lon_deg = F.col("lon").cast("double") / 1e7
     lat_deg = F.col("lat").cast("double") / 1e7
     return ev.select(
-        "type", "id", "event_ts", "event_changeset", "event_uid", "own_change",
-        "doc_id", "version", "visible", "tags",
+        *STATE_COLS, "tags",
         node_geometry_cols(F.col("lon"), F.col("lat"), F.col("visible")).alias(
             "wkt"
         ),
@@ -271,78 +316,45 @@ def _node_states_direct(nodes: DataFrame, squash: bool = True) -> DataFrame:
     )
 
 
+def _states(df: DataFrame, tags) -> DataFrame:
+    """The common state columns around a geometry struct ``g``."""
+    return df.select(
+        *STATE_COLS, tags.alias("tags"),
+        F.lit(None).cast("string").alias("wkt"),
+        *[F.col(f"g.{c}").alias(c) for c in GEOM_COLS],
+    )
+
+
 def _way_states(
     events: DataFrame,
     ways: DataFrame,
     nodes: DataFrame,
     interpreter: TagInterpreter | None,
 ) -> DataFrame:
-    ev = events.filter(F.col("type") == "way").drop("type")
     st = asof_resolve(
-        ev,
-        ways.select("id", "doc_id", "version", "visible", "ts", "tags", "refs"),
-        "id",
+        events.filter(F.col("type") == "way"),
+        ways.select(*OWNER, "doc_id", "version", "visible", "ts", "tags", "refs"),
         "event_ts",
     )
-    refs = st.select(
-        "id", "event_ts", "event_changeset", "event_uid", "own_change",
+    probes = st.select(
+        *EVENT_COLS,
         F.col("v_doc_id").alias("doc_id"),
         F.col("v_version").alias("version"),
         F.col("v_visible").alias("visible"),
         F.col("v_tags").alias("tags"),
         F.col("v_refs").alias("refs"),
-        F.posexplode_outer("v_refs").alias("pos", "ref"),
+        F.posexplode_outer("v_refs").alias("ppos", "pref"),
     )
-    node_v = nodes.select(
-        F.col("id").alias("ref"), F.col("ts").alias("n_ts"),
-        F.col("version").alias("n_version"), F.col("visible").alias("n_visible"),
-        (F.col("lon").cast("double") / 1e7).alias("n_lon"),
-        (F.col("lat").cast("double") / 1e7).alias("n_lat"),
-    )
-    j = refs.join(node_v, "ref", "left").filter(
-        F.col("n_ts").isNull() | (F.col("n_ts") <= F.col("event_ts"))
-    )
-    wdedup = Window.partitionBy("id", "event_ts", "pos").orderBy(
-        F.col("n_ts").desc_nulls_last(), F.col("n_version").desc_nulls_last()
-    )
-    j = j.withColumn("__rn", F.row_number().over(wdedup)).filter("__rn = 1")
-    grouped = j.groupBy(
-        "id", "event_ts", "event_changeset", "event_uid", "own_change",
-        "doc_id", "version", "visible",
+    grouped = _asof_nodes(probes, nodes, [*OWNER, "event_ts", "ppos"]).groupBy(
+        *STATE_COLS
     ).agg(
-        F.first("tags").alias("tags"),
-        F.first("refs").alias("refs"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("pos", F.col("ref").alias("nid"), "n_visible", "n_lon", "n_lat")
-            )
-        ).alias("pline"),
-    )
-    line = F.transform(
-        F.filter(
-            F.col("pline"),
-            lambda p: p["n_visible"].isNotNull() & p["n_visible"],
-        ),
-        lambda p: F.struct(
-            p["nid"].alias("nid"), p["n_lon"].alias("lon"), p["n_lat"].alias("lat")
-        ),
+        F.first("tags").alias("tags"), F.first("refs").alias("refs"), _probe_list()
     )
     wudf = way_geometry_udf(interpreter)
-    out = grouped.withColumn("line", line).withColumn(
-        "g", wudf("visible", "tags", "refs", "line")
+    out = grouped.withColumn(
+        "g", wudf("visible", "tags", "refs", _node_line(F.col("pline")))
     )
-    return out.select(
-        F.lit("way").alias("type"), "id", "event_ts", "event_changeset",
-        "event_uid", "own_change", "doc_id", "version", "visible", "tags",
-        F.lit(None).cast("string").alias("wkt"),
-        F.col("g.geom").alias("geom"),
-        F.col("g.area").alias("area"),
-        F.col("g.length").alias("length"),
-        F.col("g.minx").alias("minx"),
-        F.col("g.miny").alias("miny"),
-        F.col("g.maxx").alias("maxx"),
-        F.col("g.maxy").alias("maxy"),
-    )
+    return _states(out, F.col("tags"))
 
 
 def _relation_states(
@@ -354,11 +366,20 @@ def _relation_states(
     resolve_nested: bool = False,
     include_old_style: bool = False,
 ) -> DataFrame:
-    """Relation state (geometry) as-of each modification event.
+    """Relation state (geometry) as-of each modification event, in one
+    probe pass.
+
+    Each event's relation version is exploded into its members; a member
+    way left-joins its version as of the event (null when it has none
+    yet); one ``posexplode_outer`` emits the probe refs — the way
+    version's refs, or the member node itself; one node as-of join
+    (:func:`_asof_nodes`) resolves them; one group per member builds its
+    line, one group per event its member list.  A member way or node
+    missing or deleted at the event has a null line.
 
     ``resolve_nested``: additionally resolve RELATION members one level
-    deep — the child relation's geometry is built as-of the parent's
-    event timestamps and included in the member set
+    deep — the child relation's geometry is built (by this function) as
+    of the parent's event timestamps and included in the member set
     (OSHDBGeometryBuilderInternal.java:305-358 recursion).  Like the
     reference, child-relation MODIFICATIONS do not generate parent
     events (member histories recurse into nodes/ways only,
@@ -367,171 +388,105 @@ def _relation_states(
     ``include_old_style``: apply the old-style-multipolygon fix-up
     (holes-only geometry + outer-way tag substitution) to each event
     state, per the semantics documented for the flag
-    (CellIterator.java:92-97,330-380).  NOTE a deliberate divergence:
-    the reference's iterateByContribution THROWS
-    UnsupportedOperationException for this flag ("not yet properly
+    (CellIterator.java:92-97,330-380); the outer way's tags are those of
+    its version as of the event, taken from the same member-way join.
+    NOTE a deliberate divergence: the reference's iterateByContribution
+    THROWS UnsupportedOperationException for this flag ("not yet properly
     implemented", CellIterator.java:523-526); we complete the documented
     intent instead — the same per-state substitution its snapshot
     iterator applies, so before/after states classify consistently.
     """
-    ev = events.filter(F.col("type") == "relation").drop("type")
     st = asof_resolve(
-        ev,
-        rels.select("id", "doc_id", "version", "visible", "ts", "tags", "members"),
-        "id",
+        events.filter(F.col("type") == "relation"),
+        rels.select(*OWNER, "doc_id", "version", "visible", "ts", "tags", "members"),
         "event_ts",
     )
     mem = st.select(
-        "id", "event_ts", "event_changeset", "event_uid", "own_change",
+        *EVENT_COLS,
         F.col("v_doc_id").alias("doc_id"),
         F.col("v_version").alias("version"),
         F.col("v_visible").alias("visible"),
         F.col("v_tags").alias("tags"),
         F.posexplode_outer("v_members").alias("pos", "m"),
     ).select(
-        "id", "event_ts", "event_changeset", "event_uid", "own_change",
-        "doc_id", "version", "visible", "tags", "pos",
+        *STATE_COLS, "tags", "pos",
         F.col("m.type").alias("mtype"), F.col("m.ref").alias("ref"),
         F.col("m.role").alias("role"),
     )
-    # resolve member WAY state as-of event_ts: way version + its node line
-    way_targets = mem.filter(F.col("mtype") == "way").select(
-        F.col("ref").alias("w_id"), F.col("event_ts")
-    ).distinct()
     way_v = ways.select(
-        F.col("id").alias("w_id"), F.col("ts").alias("w_ts"),
-        F.col("version").alias("w_version"), F.col("visible").alias("w_visible"),
-        F.col("refs").alias("w_refs"),
+        F.col("id").alias("__w_id"), F.col("ts").alias("__w_ts"),
+        F.col("version").alias("__w_version"),
+        F.col("visible").alias("w_visible"), F.col("refs").alias("w_refs"),
+        F.col("tags").alias("w_tags"),
     )
-    wj = way_targets.join(way_v, "w_id", "left").filter(
-        F.col("w_ts").isNull() | (F.col("w_ts") <= F.col("event_ts"))
-    )
-    wd = Window.partitionBy("w_id", "event_ts").orderBy(
-        F.col("w_ts").desc_nulls_last(), F.col("w_version").desc_nulls_last()
-    )
-    wj = wj.withColumn("__rn", F.row_number().over(wd)).filter("__rn = 1").drop("__rn")
-    wrefs = wj.select(
-        "w_id", "event_ts", "w_visible",
-        F.posexplode_outer("w_refs").alias("pos", "ref"),
-    )
-    node_v = nodes.select(
-        F.col("id").alias("ref"), F.col("ts").alias("n_ts"),
-        F.col("version").alias("n_version"), F.col("visible").alias("n_visible"),
-        (F.col("lon").cast("double") / 1e7).alias("n_lon"),
-        (F.col("lat").cast("double") / 1e7).alias("n_lat"),
-    )
-    nj = wrefs.join(node_v, "ref", "left").filter(
-        F.col("n_ts").isNull() | (F.col("n_ts") <= F.col("event_ts"))
-    )
-    nd = Window.partitionBy("w_id", "event_ts", "pos").orderBy(
-        F.col("n_ts").desc_nulls_last(), F.col("n_version").desc_nulls_last()
-    )
-    nj = nj.withColumn("__rn", F.row_number().over(nd)).filter("__rn = 1")
-    way_lines_at = nj.groupBy("w_id", "event_ts", "w_visible").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("pos", F.col("ref").alias("nid"), "n_visible", "n_lon", "n_lat")
-            )
-        ).alias("pline")
-    ).withColumn(
-        "w_line",
-        F.transform(
-            F.filter(
-                F.col("pline"),
-                lambda p: p["n_visible"].isNotNull() & p["n_visible"],
-            ),
-            lambda p: F.struct(
-                p["nid"].alias("nid"), p["n_lon"].alias("lon"), p["n_lat"].alias("lat")
-            ),
-        ),
-    ).drop("pline")
-
-    # resolve member NODE state as-of event_ts
-    node_targets = mem.filter(F.col("mtype") == "node").select(
-        F.col("ref").alias("ref"), F.col("event_ts")
-    ).distinct()
-    nmj = node_targets.join(node_v, "ref", "left").filter(
-        F.col("n_ts").isNull() | (F.col("n_ts") <= F.col("event_ts"))
-    )
-    nmd = Window.partitionBy("ref", "event_ts").orderBy(
-        F.col("n_ts").desc_nulls_last(), F.col("n_version").desc_nulls_last()
-    )
-    nmj = (
-        nmj.withColumn("__rn", F.row_number().over(nmd))
-        .filter("__rn = 1")
-        .select(
-            "ref", "event_ts",
-            F.col("n_visible").alias("nm_visible"),
-            F.struct(
-                F.col("ref").alias("nid"),
-                F.col("n_lon").alias("lon"),
-                F.col("n_lat").alias("lat"),
-            ).alias("nm_point"),
-        )
-    )
-
-    joined = (
+    mw = _newest(
         mem.join(
-            way_lines_at.withColumnRenamed("w_id", "ref"),
-            ["ref", "event_ts"],
+            way_v,
+            (F.col("mtype") == "way") & (F.col("ref") == F.col("__w_id"))
+            & (F.col("__w_ts") <= F.col("event_ts")),
             "left",
-        )
-        .join(nmj, ["ref", "event_ts"], "left")
-        .withColumn(
-            "line",
-            F.when(
-                (F.col("mtype") == "way")
-                & F.col("w_visible").isNotNull()
-                & F.col("w_visible"),
-                F.col("w_line"),
-            ).when(
-                (F.col("mtype") == "node")
-                & F.col("nm_visible").isNotNull()
-                & F.col("nm_visible"),
-                F.array(F.col("nm_point")),
-            ),
-        )
+        ),
+        ["ref", *OWNER, "event_ts", "pos"], "__w_ts", "__w_version",
+    )
+    is_way = (F.col("mtype") == "way") & F.coalesce(F.col("w_visible"), F.lit(False))
+    probe_refs = F.when(is_way, F.col("w_refs")).when(
+        F.col("mtype") == "node", F.array("ref")
+    )
+    probes = mw.select(
+        *STATE_COLS, "tags", "pos", "mtype", "ref", "role", "w_visible",
+        "w_tags", F.posexplode_outer(probe_refs).alias("ppos", "pref"),
+    )
+    member = _asof_nodes(
+        probes, nodes, [*OWNER, "event_ts", "pos", "ppos"]
+    ).groupBy(*STATE_COLS, "pos", "mtype", "ref", "role", "w_visible").agg(
+        F.first("tags").alias("tags"), F.first("w_tags").alias("w_tags"),
+        _probe_list(),
+    )
+    line = _node_line(F.col("pline"))
+    member = member.withColumn(
+        "line",
+        F.when(is_way, line).when(
+            (F.col("mtype") == "node") & (F.size(line) > 0), line
+        ),
     )
     if resolve_nested:
-        rel_targets = mem.filter(F.col("mtype") == "relation").select(
-            F.col("ref").alias("id"), "event_ts"
-        ).distinct()
-        child_events = rel_targets.select(
-            F.lit("relation").alias("type"),
-            "id",
-            "event_ts",
-            F.lit(0).cast("long").alias("event_changeset"),
-            F.lit(0).cast("int").alias("event_uid"),
-            F.lit(False).alias("own_change"),
+        child_events = (
+            mem.filter(F.col("mtype") == "relation")
+            .select(F.lit("relation").alias("type"), F.col("ref").alias("id"),
+                    "event_ts")
+            .distinct()
+            .select(
+                *OWNER, "event_ts",
+                F.lit(0).cast("long").alias("event_changeset"),
+                F.lit(0).cast("int").alias("event_uid"),
+                F.lit(False).alias("own_change"),
+            )
         )
-        child = _relation_states(
-            child_events, rels, ways, nodes, interpreter, resolve_nested=False
-        )
-        child_side = child.select(
-            F.col("id").alias("ref"),
-            "event_ts",
-            F.col("visible").alias("r_visible"),
-            F.col("geom").alias("r_geom"),
-        )
-        joined = joined.join(child_side, ["ref", "event_ts"], "left").withColumn(
-            "m_geom",
-            F.when(
-                (F.col("mtype") == "relation")
-                & F.col("r_visible").isNotNull()
-                & F.col("r_visible"),
-                F.col("r_geom"),
+        child = _relation_states(child_events, rels, ways, nodes, interpreter)
+        member = member.join(
+            child.select(
+                F.col("id").alias("__c_id"), F.col("event_ts").alias("__c_ts"),
+                F.col("visible").alias("__c_visible"),
+                F.col("geom").alias("__c_geom"),
             ),
+            (F.col("mtype") == "relation") & (F.col("ref") == F.col("__c_id"))
+            & (F.col("event_ts") == F.col("__c_ts")),
+            "left",
+        ).withColumn(
+            "m_geom",
+            F.when(F.coalesce(F.col("__c_visible"), F.lit(False)), F.col("__c_geom")),
         )
     else:
-        joined = joined.withColumn("m_geom", F.lit(None).cast("binary"))
-    grouped = joined.groupBy(
-        "id", "event_ts", "event_changeset", "event_uid", "own_change",
-        "doc_id", "version", "visible",
-    ).agg(
+        member = member.withColumn("m_geom", F.lit(None).cast("binary"))
+    outer_way = (F.col("mtype") == "way") & (F.col("role") == "outer")
+    grouped = member.groupBy(*STATE_COLS).agg(
         F.first("tags").alias("tags"),
         F.array_sort(
             F.collect_list(F.struct("pos", "role", "mtype", "line", "m_geom"))
         ).alias("pmembers"),
+        # the first outer way and its tags as of the event (old-style fix-up)
+        F.min_by("ref", F.when(outer_way, F.col("pos"))).alias("__outer_ref"),
+        F.min_by("w_tags", F.when(outer_way, F.col("pos"))).alias("__outer_tags"),
     )
     members = F.transform(
         F.col("pmembers"),
@@ -542,90 +497,39 @@ def _relation_states(
             p["m_geom"].alias("m_geom"),
         ),
     )
-    rudf = relation_geometry_udf(interpreter)
-    out = grouped.withColumn("members", members).withColumn(
-        "g", rudf("visible", "tags", "members")
+    out = grouped.withColumn(
+        "g", relation_geometry_udf(interpreter)("visible", "tags", members)
     )
     # bbox columns ride along for JVM-side AOI classification downstream;
     # for old-style fix-ups the PRE-substitution bbox is kept — holes are a
     # subset of the original extent, so inside/outside classification stays
     # conservative and border rows still get the exact Python check
-    result = out.select(
-        F.lit("relation").alias("type"), "id", "event_ts", "event_changeset",
-        "event_uid", "own_change", "doc_id", "version", "visible", "tags",
-        F.lit(None).cast("string").alias("wkt"),
-        F.col("g.geom").alias("geom"),
-        F.col("g.area").alias("area"),
-        F.col("g.length").alias("length"),
-        F.col("g.minx").alias("minx"),
-        F.col("g.miny").alias("miny"),
-        F.col("g.maxx").alias("maxx"),
-        F.col("g.maxy").alias("maxy"),
-    )
     if not include_old_style:
-        return result
-
-    # old-style multipolygon fix-up per event state (see docstring): flag
-    # computed on the as-of relation version, outer way's tags resolved
-    # as-of the same event — both restricted to the (tiny) flagged subset
-    from oshdb_spark.operators.geometry_ops import (
-        holes_only_udf,
-        old_style_flag_udf,
-    )
-
-    flag = old_style_flag_udf(interpreter)
+        return _states(out, F.col("tags"))
     mm = F.transform(
-        F.col("v_members"),
-        lambda m: F.struct(m["type"].alias("mtype"), m["role"].alias("role")),
+        F.filter(F.col("pmembers"), lambda p: p["pos"].isNotNull()),
+        lambda p: F.struct(p["mtype"].alias("mtype"), p["role"].alias("role")),
     )
-    outer_ref = F.filter(
-        F.col("v_members"),
-        lambda m: (m["type"] == F.lit("way")) & (m["role"] == F.lit("outer")),
-    )[0]["ref"]
-    flagged = (
-        st.withColumn("__old", flag("v_tags", mm))
-        .filter("__old")
-        .select("id", "event_ts", outer_ref.alias("__outer_ref"))
+    # no fix-up while the outer way exists only after the event (an outer
+    # way with no version at all still gets it)
+    born = ways.groupBy(F.col("id").alias("__outer_ref")).agg(
+        F.min("ts").alias("__outer_born")
     )
-    way_tags = ways.select(
-        F.col("id").alias("__outer_ref"),
-        F.col("ts").alias("__w_ts"),
-        F.col("version").alias("__w_version"),
-        F.col("tags").alias("__way_tags"),
+    is_old = F.col("__old")
+    out = out.join(born, "__outer_ref", "left").withColumn(
+        "__old",
+        old_style_flag_udf(interpreter)("tags", mm)
+        & ~F.coalesce(F.col("__outer_born") > F.col("event_ts"), F.lit(False)),
+    ).withColumn("__h", holes_only_udf()(F.when(is_old, F.col("g.geom"))))
+    g = F.struct(*[
+        (F.when(is_old, F.col(f"__h.{c}")).otherwise(F.col(f"g.{c}"))
+         if c in ("geom", "area", "length") else F.col(f"g.{c}")).alias(c)
+        for c in GEOM_COLS
+    ])
+    tags = F.when(is_old, F.coalesce(F.col("__outer_tags"), F.col("tags"))).otherwise(
+        F.col("tags")
     )
-    fj = flagged.join(way_tags, "__outer_ref", "left").filter(
-        F.col("__w_ts").isNull() | (F.col("__w_ts") <= F.col("event_ts"))
-    )
-    wdw = Window.partitionBy("id", "event_ts").orderBy(
-        F.col("__w_ts").desc_nulls_last(), F.col("__w_version").desc_nulls_last()
-    )
-    fj = (
-        fj.withColumn("__rn", F.row_number().over(wdw))
-        .filter("__rn = 1")
-        .select("id", "event_ts", F.lit(True).alias("__old"), "__way_tags")
-    )
-    hu = holes_only_udf()
-    is_old = F.col("__old").isNotNull()
-    return (
-        result.join(fj, ["id", "event_ts"], "left")
-        .withColumn("__h", F.when(is_old, hu(F.col("geom"))))
-        .withColumn(
-            "geom", F.when(is_old, F.col("__h.geom")).otherwise(F.col("geom"))
-        )
-        .withColumn(
-            "area", F.when(is_old, F.col("__h.area")).otherwise(F.col("area"))
-        )
-        .withColumn(
-            "length",
-            F.when(is_old, F.col("__h.length")).otherwise(F.col("length")),
-        )
-        .withColumn(
-            "tags",
-            F.when(is_old, F.coalesce(F.col("__way_tags"), F.col("tags")))
-            .otherwise(F.col("tags")),
-        )
-        .drop("__h", "__old", "__way_tags")
-    )
+    return _states(out.withColumn("g", g), tags)
 
 
 # ---------------------------------------------------------------------------
@@ -634,11 +538,10 @@ def _relation_states(
 
 
 def classify_contributions(
-    states: DataFrame,
+    branches: dict[str, DataFrame],
     match_col: F.Column | None = None,
     bbox_deg: tuple[float, float, float, float] | None = None,
     polygon: dict | None = None,
-    types: set[str] | frozenset[str] | None = None,
 ) -> DataFrame:
     """lag() window + when/otherwise classification (CellIterator.java:586-726).
 
@@ -659,14 +562,23 @@ def classify_contributions(
     member moving entirely outside the AOI yields a contribution row with
     EMPTY activities; and the row's ``clipped_wkt`` output column.
 
-    ``types``: the entity kinds ``states`` holds (None: all three).
-    Without ``way`` and ``relation`` no row carries packed geometry, so
-    with no ``polygon`` the bbox clip and the WKT renders are Column
-    expressions only (nodes are never border rows) and no Python UDF is
-    planned, as in ``snapshot_view``.
+    ``branches``: each entity kind's event states, keyed by kind; their
+    union is classified.  The clip is planned per branch, before the
+    union: node rows carry no packed geometry, so with no ``polygon`` the
+    node branch's clip is Column expressions only (nodes are never border
+    rows), and a view without ``way`` and ``relation`` plans no Python
+    UDF, as in ``snapshot_view``.
     """
-    packed = types is None or bool(set(types) & {"way", "relation"})
-    w = Window.partitionBy("type", "id").orderBy("event_ts")
+    packed = bool(set(branches) & {"way", "relation"})
+    aoi = bbox_deg is not None or polygon is not None
+    states = None
+    for kind, df in branches.items():
+        if aoi:
+            df = df.withColumn(
+                "__clip", aoi_clip(bbox_deg, polygon, packed=kind != "node")
+            )
+        states = df if states is None else states.unionByName(df)
+    w = Window.partitionBy(*OWNER).orderBy("event_ts")
     effective = F.col("visible") & ~is_empty_geom_cols(
         F.col("geom"), F.col("wkt")
     )
@@ -676,11 +588,7 @@ def classify_contributions(
     # packed bytes for ways/relations, the node WKT string cast to binary —
     # both JVM-side byte compares, no decode
     gbin = F.coalesce(F.col("geom"), F.col("wkt").cast("binary"))
-    aoi = bbox_deg is not None or polygon is not None
     if aoi:
-        states = states.withColumn(
-            "__clip", aoi_clip(bbox_deg, polygon, packed=packed)
-        )
         clip = F.col("__clip")
         effective = effective & ~clip_is_empty(clip)
         gbin = F.coalesce(
@@ -818,9 +726,9 @@ def contribution_view(
         types = {"node", "way", "relation"}
     nodes = entities.filter(F.col("type") == "node")
 
-    states: DataFrame | None = None
+    branches: dict[str, DataFrame] = {}
     if "node" in types:
-        states = _node_states_direct(nodes, squash=squash)
+        branches["node"] = _node_states_direct(nodes, squash=squash)
     if "way" in types or "relation" in types:
         ways = entities.filter(F.col("type") == "way")
         rels = entities.filter(F.col("type") == "relation")
@@ -828,11 +736,10 @@ def contribution_view(
         if squash:
             events = squash_changesets(events)
         if "way" in types:
-            ws = _way_states(events, ways, nodes, interpreter)
-            states = ws if states is None else states.unionByName(ws)
+            branches["way"] = _way_states(events, ways, nodes, interpreter)
         if "relation" in types:
             # super-relations trigger one level of nested member resolution
-            rs = _relation_states(
+            branches["relation"] = _relation_states(
                 events, rels, ways, nodes, interpreter,
                 resolve_nested=(
                     has_nested_relations(rels)
@@ -840,7 +747,6 @@ def contribution_view(
                 ),
                 include_old_style=include_old_style_multipolygons,
             )
-            states = rs if states is None else states.unionByName(rs)
     if attach_metrics:
         # derived geometry metric columns on EVERY event state, so an
         # osm_filter referencing vertices/outers/inners/roundness/
@@ -853,10 +759,9 @@ def contribution_view(
         m = geometry_metrics_udf()(F.col("geom"), F.col("wkt"))
         for c in ("g_vertices", "g_outers", "g_inners", "g_roundness",
                   "g_squareness"):
-            states = states.withColumn(c, m[c])
+            branches = {k: df.withColumn(c, m[c]) for k, df in branches.items()}
     classified = classify_contributions(
-        states, match_col=osm_filter, bbox_deg=bbox_deg, polygon=polygon,
-        types=types,
+        branches, match_col=osm_filter, bbox_deg=bbox_deg, polygon=polygon,
     )
     # half-open [t_start, t_end): OSHDBTimestampInterval.includes is
     # from <= t < to, so a contribution at exactly t_end is excluded

@@ -7,6 +7,8 @@ no extra Exchange beyond its group-by)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -239,6 +241,55 @@ def test_node_contribution_bbox_equals_all_types_path(docs_db):
     assert narrowed and narrowed == rows(None)
 
 
+# the contribution plan: one owner-keyed exchange per kind serves its
+# windows and groups, and relation members resolve in one probe pass
+
+
+def _contribution(db, filt: str | None = None):
+    from oshdb_spark.api import ContributionView
+
+    v = (ContributionView.on(db).timestamps(SNAP_TS[0], SNAP_TS[-1])
+         .area_of_interest(bbox=SNAP_BOX))
+    return v.filter(filt) if filt else v
+
+
+@pytest.mark.parametrize(
+    "filt, exchanges, max_lines",
+    [
+        # 50 Exchanges and 460 plan lines before the one-pass rewrite
+        (None, 15, 230),
+        # 38 and 351
+        ("type:relation", 9, 135),
+    ],
+    ids=["all-types", "relation"],
+)
+def test_contribution_plan_size(docs_db, filt, exchanges, max_lines):
+    plan = _plan(_contribution(docs_db, filt).dataframe())
+    assert plan.count("Exchange") == exchanges, plan[:6000]
+    assert len(plan.splitlines()) <= max_lines, plan[:6000]
+
+
+def test_contribution_plan_has_no_all_null_python_call(docs_db):
+    plan = _plan(_contribution(docs_db).dataframe())
+    # the node branch's null geometry never reaches a Python UDF
+    assert not re.search(r"_udf\((null(, )?)+\)", plan), plan[:6000]
+
+
+def test_unfiltered_contribution_job_count(spark, docs_db):
+    docs_db.nested_relations  # the handle's one probe, outside the count
+    sc = spark.sparkContext
+    group = "plan-shape-contribution-jobs"
+    sc.setJobGroup(group, "unfiltered contribution count")
+    try:
+        _contribution(docs_db).count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 31 before the one-pass rewrite
+    assert len(jobs) <= 20
+
+
 def test_zonal_and_knn_constant_frames_are_local(spark, docs_db):
     from oshdb_spark.operators.knn import knn_join
 
@@ -341,11 +392,14 @@ def _python_and_exchanges(df) -> tuple[int, int]:
         ("snapshot", {"bbox": AOI_BOX}, False, (5, 3)),
         # + the exact intersects test and the polygon clip
         ("snapshot", {"polygon": L_ZONE}, False, (5, 3)),
-        # one clip serves aliveness, change detection and clipped_wkt
-        ("contribution", {"bbox": AOI_BOX}, False, (3, 11)),
-        ("contribution", {"polygon": L_ZONE}, False, (3, 11)),
-        # count() prunes the WKT rendering, not the clip
-        ("contribution", {"polygon": L_ZONE}, True, (2, 12)),
+        # one clip serves aliveness, change detection and clipped_wkt;
+        # one (type, id) exchange serves the way branch's windows and
+        # groups (11 Exchanges before)
+        ("contribution", {"bbox": AOI_BOX}, False, (3, 6)),
+        ("contribution", {"polygon": L_ZONE}, False, (3, 6)),
+        # count() prunes the WKT rendering, not the clip (12 Exchanges
+        # before)
+        ("contribution", {"polygon": L_ZONE}, True, (2, 7)),
     ],
     ids=["snapshot-bbox", "snapshot-polygon", "contribution-bbox",
          "contribution-polygon", "contribution-polygon-count"],

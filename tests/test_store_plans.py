@@ -151,6 +151,30 @@ def test_etl_leaves_no_persisted_data(spark, docs_parquet, tmp_path):
         ents.unpersist()
 
 
+def test_etl_parses_its_input_once(spark, docs_parquet, tmp_path):
+    """Every input row is computed once, although the write's concurrent
+    tiling stages all read the ETL's own cache.  A task that finds the
+    block being written by another waits for it and reads it (Spark logs
+    "Block ... already exists on this machine; not re-adding it"); it does
+    not recompute the input."""
+    import time
+
+    path, _, _ = docs_parquet
+    docs = spark.read.parquet(path)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(len(b))
+            time.sleep(0.5)  # a slow parse: concurrent stages overlap it
+            yield b
+
+    counted = docs.mapInPandas(count_rows, docs.schema)
+    write_entities_table(extract_entities(counted), str(tmp_path / "etl"),
+                         n_buckets=4)
+    assert seen.value == docs.count()
+
+
 def test_knn_plan_broadcasts(spark, docs_parquet):
     from oshdb_spark.operators.knn import knn_join
 
