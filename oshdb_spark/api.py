@@ -51,7 +51,7 @@ from oshdb_spark.operators.aggregations import (
     weighted_avg_agg,
     zerofill,
 )
-from oshdb_spark.operators.contribution import contribution_view
+from oshdb_spark.operators.contribution import contribution_states, contributions_of
 from oshdb_spark.operators.snapshot import has_nested_relations, snapshot_view
 from oshdb_spark.timestamps import parse_iso, timestamps as make_timestamps
 
@@ -157,7 +157,24 @@ class OSHDB:
     The Spark analogue of OSHDBDatabase (api/db/OSHDBDatabase.java:26):
     holds the session, the (Iceberg/parquet-backed) entities table and the
     tag dictionary used to int-code DSL filters.
+
+    The handle memoizes what its queries would otherwise rebuild each
+    time: the nested-relation probe (``nested_relations``) and the
+    contribution view's per-kind event states
+    (``operators.contribution.contribution_states``: events, squash,
+    as-of states and geometry).  Those states read neither the AOI nor
+    the interval, so every ``ContributionView`` with the same narrowed
+    type set, OSH-prefilter conjuncts, interpreter and squash/old-style
+    flags reuses one set of state frames and adds only its own
+    classification, clip and interval filter.  That skips thousands of
+    Py4J round trips of plan building per query.  It is safe because
+    ``entities`` is fixed when the handle is created (``from_store``
+    lists the store's files then), so a memoized frame always plans over
+    the same input as a fresh one.
     """
+
+    # distinct contribution-state keys kept per handle, newest first
+    _MEMO_SIZE = 8
 
     def __init__(
         self,
@@ -171,6 +188,7 @@ class OSHDB:
         self.translator = translator or TagTranslator()
         self.interpreter = interpreter
         self.timeout_s: float | None = None
+        self._memo: list[tuple[tuple, object]] = []
 
     def timeout(self, seconds: float | None) -> "OSHDB":
         """Wall-clock budget for terminal reducers; exceeded -> the query's
@@ -191,6 +209,17 @@ class OSHDB:
         return has_nested_relations(
             self.entities.filter(F.col("type") == "relation")
         )
+
+    def _memoized(self, key: tuple, build: Callable[[], object]):
+        """``build()``'s result, built once per ``key`` on this handle.
+        Keys are compared with ``==`` (filter ``Node``s are unhashable
+        dataclasses); the ``_MEMO_SIZE`` newest keys are kept."""
+        for k, v in self._memo:
+            if k == key:
+                return v
+        v = build()
+        self._memo = [(key, v), *self._memo[: self._MEMO_SIZE - 1]]
+        return v
 
     @classmethod
     def from_docs(
@@ -495,33 +524,11 @@ class _MapReducer:
         """
         from pyspark.sql import Window
 
-        from oshdb_spark.filters.dsl import osh_prefilter
-
-        # a type-only conjunct bounds nothing: every prunable type below
-        # lies in the narrowed set, the intersection of every conjunct's
-        # type set, which _entities() has already filtered on
-        ub = None
-        for n in nodes:
-            for conj in _conjuncts(n):
-                if _type_only(conj):
-                    continue
-                c = osh_prefilter(conj)
-                if c is not None:
-                    ub = c if ub is None else (ub & c)
-        if ub is None:
+        bounds = self._prefilter_bounds(nodes)
+        if not bounds:
             return ents
-        targets = set(self._type_set())
-        prunable = set()
-        for t in targets:
-            needed_as_member = (
-                ("way" in targets or "relation" in targets)
-                if t == "node"
-                else ("relation" in targets) if t == "way" else False
-            )
-            if not needed_as_member:
-                prunable.add(t)
-        if not prunable:
-            return ents
+        ub = functools.reduce(lambda a, b: a & b, [c for _, c in bounds])
+        prunable = self._prunable_types()
         w = Window.partitionBy("type", "id")
         keep = F.max(ub.cast("int")).over(w) == 1
         return (
@@ -534,6 +541,41 @@ class _MapReducer:
             .filter("__osh_keep")
             .drop("__osh_keep")
         )
+
+    def _prunable_types(self) -> set[str]:
+        """The narrowed types the OSH prefilter may prune: those no other
+        narrowed type needs as members."""
+        targets = set(self._type_set())
+        prunable = set()
+        for t in targets:
+            needed_as_member = (
+                ("way" in targets or "relation" in targets)
+                if t == "node"
+                else ("relation" in targets) if t == "way" else False
+            )
+            if not needed_as_member:
+                prunable.add(t)
+        return prunable
+
+    def _prefilter_bounds(self, nodes) -> list[tuple[Node, Column]]:
+        """The conjuncts of ``nodes`` that bound the OSH prefilter, each
+        with its per-version bound; empty when the prefilter keeps every
+        row.  A type-only conjunct bounds nothing: every prunable type
+        lies in the narrowed set, the intersection of every conjunct's
+        type set, which _entities() has already filtered on."""
+        from oshdb_spark.filters.dsl import osh_prefilter
+
+        if not self._prunable_types():
+            return []
+        bounds = []
+        for n in nodes:
+            for conj in _conjuncts(n):
+                if _type_only(conj):
+                    continue
+                c = osh_prefilter(conj)
+                if c is not None:
+                    bounds.append((conj, c))
+        return bounds
 
     # -- materialization ---------------------------------------------------
 
@@ -857,7 +899,7 @@ class ContributionView(_MapReducer):
 
         # derived geometry metrics (vertices/outers/inners/roundness/
         # squareness) participate in aliveness like any other geometry
-        # predicate (FilterExpression.java:98-113): contribution_view
+        # predicate (FilterExpression.java:98-113): contributions_of
         # attaches the metric columns to every event state when needed
         needs_metrics = any(metrics_needed(c) for c in alive_nodes)
         from oshdb_spark.filters.dsl import compile_with_packed_geom
@@ -869,17 +911,28 @@ class ContributionView(_MapReducer):
             c = compile_with_packed_geom(n)
             match = c if match is None else (match & c)
         types = self._type_set()
-        df = contribution_view(
+        # the event states read neither the AOI nor the interval: built
+        # once per handle for everything they do read (the last two key
+        # fields are contribution_states' squash and old-style flags)
+        key = (
+            "contribution_states", types,
+            tuple(c for c, _ in self._prefilter_bounds(alive_nodes)),
+            self.db.interpreter, True, False,
+        )
+        branches = self.db._memoized(key, lambda: contribution_states(
             self._osh_prefilter(self._entities(), alive_nodes),
-            t0,
-            t1,
             interpreter=self.db.interpreter,
             types=types,
+            nested_relations=self._nested_relations(),
+        ))
+        df = contributions_of(
+            branches,
+            t0,
+            t1,
             osm_filter=match,
             attach_metrics=needs_metrics,
             bbox_deg=self.state.bbox_deg,
             polygon=_thaw(self.state.polygon),
-            nested_relations=self._nested_relations(),
         )
         for n in post_nodes:
             df = df.filter(n.osm_column())

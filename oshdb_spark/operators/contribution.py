@@ -681,41 +681,25 @@ def _canon_map(m):
 # ---------------------------------------------------------------------------
 
 
-def contribution_view(
+def contribution_states(
     entities: DataFrame,
-    t_start: int,
-    t_end: int,
     interpreter: TagInterpreter | None = None,
     squash: bool = True,
     types: set[str] | None = None,
-    osm_filter: F.Column | None = None,
     include_old_style_multipolygons: bool = False,
-    attach_metrics: bool = False,
-    bbox_deg: tuple[float, float, float, float] | None = None,
-    polygon: dict | None = None,
     nested_relations: bool | None = None,
-) -> DataFrame:
-    """The full contribution view over [t_start, t_end].
-
-    Events outside the interval still feed the lag state (an entity created
-    before the interval and deleted inside it yields a DELETION) but are not
-    emitted (CellIterator.java:602-618).
-
-    ``include_old_style_multipolygons``: the reference's contribution
-    iterator throws UnsupportedOperationException for this flag
-    (CellIterator.java:523-526); we implement the documented snapshot-side
-    semantics (:92-97, :330-380) uniformly — see _relation_states.
+) -> dict[str, DataFrame]:
+    """Each entity kind's event states, keyed by kind: the AOI- and
+    interval-independent half of :func:`contribution_view` (events,
+    squash, as-of states and geometry), which :func:`contributions_of`
+    turns into contributions.  An ``OSHDB`` handle builds these frames
+    once per key and reuses them on every later query.
 
     ``types`` restricts the entity kinds to build (the reference's DNF
     type-narrowing, MapReducer.java:1910-1935); when None all three kinds
     are assumed — pass the narrowed set explicitly to skip the way/relation
     member-resolution machinery (an extra full-table type-discovery scan
     here would cost more than it saves at scale).
-
-    ``bbox_deg``/``polygon``: the area of interest, the same pair
-    ``snapshot_view`` takes.  It participates in aliveness and change
-    detection (see ``classify_contributions``) and adds ``clipped_wkt``,
-    each row's geometry clipped to the AOI.
 
     ``nested_relations``: whether any relation in ``entities`` (or in a
     superset of it) has a relation member; None probes the relation
@@ -747,6 +731,21 @@ def contribution_view(
                 ),
                 include_old_style=include_old_style_multipolygons,
             )
+    return branches
+
+
+def contributions_of(
+    branches: dict[str, DataFrame],
+    t_start: int,
+    t_end: int,
+    osm_filter: F.Column | None = None,
+    attach_metrics: bool = False,
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    polygon: dict | None = None,
+) -> DataFrame:
+    """The per-query half of :func:`contribution_view`: the contributions
+    in [t_start, t_end) classified from ``contribution_states`` branches,
+    under ``osm_filter`` and the area of interest."""
     if attach_metrics:
         # derived geometry metric columns on EVERY event state, so an
         # osm_filter referencing vertices/outers/inners/roundness/
@@ -767,4 +766,48 @@ def contribution_view(
     # from <= t < to, so a contribution at exactly t_end is excluded
     return classified.filter(
         (F.col("ts") >= F.lit(int(t_start))) & (F.col("ts") < F.lit(int(t_end)))
+    )
+
+
+def contribution_view(
+    entities: DataFrame,
+    t_start: int,
+    t_end: int,
+    interpreter: TagInterpreter | None = None,
+    squash: bool = True,
+    types: set[str] | None = None,
+    osm_filter: F.Column | None = None,
+    include_old_style_multipolygons: bool = False,
+    attach_metrics: bool = False,
+    bbox_deg: tuple[float, float, float, float] | None = None,
+    polygon: dict | None = None,
+    nested_relations: bool | None = None,
+) -> DataFrame:
+    """The full contribution view over [t_start, t_end]:
+    :func:`contribution_states` then :func:`contributions_of`.
+
+    Events outside the interval still feed the lag state (an entity created
+    before the interval and deleted inside it yields a DELETION) but are not
+    emitted (CellIterator.java:602-618).
+
+    ``include_old_style_multipolygons``: the reference's contribution
+    iterator throws UnsupportedOperationException for this flag
+    (CellIterator.java:523-526); we implement the documented snapshot-side
+    semantics (:92-97, :330-380) uniformly — see _relation_states.
+
+    ``types`` and ``nested_relations``: see :func:`contribution_states`.
+
+    ``bbox_deg``/``polygon``: the area of interest, the same pair
+    ``snapshot_view`` takes.  It participates in aliveness and change
+    detection (see ``classify_contributions``) and adds ``clipped_wkt``,
+    each row's geometry clipped to the AOI.
+    """
+    branches = contribution_states(
+        entities, interpreter, squash=squash, types=types,
+        include_old_style_multipolygons=include_old_style_multipolygons,
+        nested_relations=nested_relations,
+    )
+    return contributions_of(
+        branches, t_start, t_end, osm_filter=osm_filter,
+        attach_metrics=attach_metrics, bbox_deg=bbox_deg, polygon=polygon,
     )

@@ -108,52 +108,56 @@ def write_entities_table(
             entities.unpersist()
 
 
-def write_manifest(path: str) -> int:
-    """Per-row-group (cell_zoom, cell_id) min/max index over the table's
-    parquet files — the emulation of the Iceberg manifest tree (SURVEY
-    §1.6; the sandbox has no Iceberg runtime).  Built from parquet FOOTERS
-    only (no data scan) right after the ETL write; ``read_pruned``
-    consults it at plan time to skip whole FILES — which hash-bucket
-    directory partitioning alone cannot do for cell-range queries (it
-    trades range pruning for bounded file counts).  With a real Iceberg
-    catalog this file is exactly what the table format maintains
-    transactionally per snapshot.  Returns the number of entries."""
+def _table_files(path: str) -> list[str]:
+    """The table's data files, relative to ``path``, sorted; staging and
+    metadata paths (``_``/``.``-prefixed), which Spark's listing also
+    ignores, are left out."""
     import glob as _glob
-    import json
+    import os
+
+    out = []
+    for f in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+        rel = os.path.relpath(f, path)
+        if not any(p.startswith(("_", ".")) for p in rel.split(os.sep)):
+            out.append(rel)
+    return sorted(out)
+
+
+def _footer_entries(path: str, rel: str) -> list[dict]:
+    """The manifest entries of one data file, one per row group, read
+    from its parquet footer."""
     import os
 
     import pyarrow.parquet as pq
 
+    md = pq.ParquetFile(os.path.join(path, rel)).metadata
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    zi = idx.get("cell_zoom")
+    ci = idx.get("cell_id")
     entries = []
-    for f in sorted(
-        _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    ):
-        rel_parts = os.path.relpath(f, path).split(os.sep)
-        if any(p.startswith(("_", ".")) for p in rel_parts):
-            continue  # staging/metadata paths Spark's listing also ignores
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        zi = idx.get("cell_zoom")
-        ci = idx.get("cell_id")
-        rel = os.path.relpath(f, path)
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            zs = g.column(zi).statistics if zi is not None else None
-            cs = g.column(ci).statistics if ci is not None else None
-            if (
-                zs is None or cs is None
-                or not zs.has_min_max or not cs.has_min_max
-            ):
-                entries.append(
-                    {"file": rel, "zmin": None, "zmax": None,
-                     "cmin": None, "cmax": None}
-                )
-            else:
-                entries.append(
-                    {"file": rel,
-                     "zmin": int(zs.min), "zmax": int(zs.max),
-                     "cmin": int(cs.min), "cmax": int(cs.max)}
-                )
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        zs = g.column(zi).statistics if zi is not None else None
+        cs = g.column(ci).statistics if ci is not None else None
+        if zs is None or cs is None or not zs.has_min_max or not cs.has_min_max:
+            entries.append(
+                {"file": rel, "zmin": None, "zmax": None, "cmin": None, "cmax": None}
+            )
+        else:
+            entries.append(
+                {"file": rel,
+                 "zmin": int(zs.min), "zmax": int(zs.max),
+                 "cmin": int(cs.min), "cmax": int(cs.max)}
+            )
+    return entries
+
+
+def _save_manifest(path: str, entries: list[dict]) -> int:
+    import json
+    import os
+
+    # by file, row groups in file order: the same list however it was built
+    entries = sorted(entries, key=lambda e: e["file"])
     # temp + atomic rename: a reader racing a refresh (e.g. streaming
     # ingest) must never observe a truncated manifest
     final = os.path.join(path, MANIFEST_NAME)
@@ -164,14 +168,8 @@ def write_manifest(path: str) -> int:
     return len(entries)
 
 
-def _manifest_file_matches(
-    path: str,
-    bbox_osm: tuple[int, int, int, int],
-    enlarge: bool = True,
-) -> list[str] | None:
-    """Files whose row-group (cell_zoom, cell_id) stats can intersect the
-    query bbox's cell cover — a conservative superset.  ``None`` when the
-    table has no manifest (fall back to a full-listing scan)."""
+def _load_manifest(path: str) -> list[dict] | None:
+    """The manifest's entries, or None when it is missing or corrupt."""
     import json
     import os
 
@@ -180,10 +178,62 @@ def _manifest_file_matches(
         return None
     try:
         with open(mf) as fh:
-            man = json.load(fh)
-        man["entries"]
+            entries = json.load(fh)["entries"]
     except (json.JSONDecodeError, OSError, KeyError, TypeError):
-        # corrupt/truncated manifest degrades to the unpruned listing
+        return None
+    if not isinstance(entries, list) or not all(
+        isinstance(e, dict) and "file" in e for e in entries
+    ):
+        return None
+    return entries
+
+
+def write_manifest(path: str) -> int:
+    """Per-row-group (cell_zoom, cell_id) min/max index over the table's
+    parquet files — the emulation of the Iceberg manifest tree (SURVEY
+    §1.6; the sandbox has no Iceberg runtime).  Built from parquet FOOTERS
+    only (no data scan) right after the ETL write; ``read_pruned``
+    consults it at plan time to skip whole FILES — which hash-bucket
+    directory partitioning alone cannot do for cell-range queries (it
+    trades range pruning for bounded file counts).  With a real Iceberg
+    catalog this file is exactly what the table format maintains
+    transactionally per snapshot.  Reads every file's footer; an append
+    uses :func:`update_manifest`.  Returns the number of entries."""
+    return _save_manifest(
+        path, [e for rel in _table_files(path) for e in _footer_entries(path, rel)]
+    )
+
+
+def update_manifest(path: str, added: list[str], removed: list[str] = ()) -> int:
+    """Fold an append into the manifest, reading only the footers of the
+    ``added`` files (paths relative to ``path``) and dropping the entries
+    of the ``removed`` ones, so a stream of micro-batches reads each
+    footer once rather than every footer per batch.  A missing or
+    corrupt manifest is rebuilt in full (:func:`write_manifest`).  The
+    result equals a full rebuild over the same files.  Returns the
+    number of entries."""
+    entries = _load_manifest(path)
+    if entries is None:
+        return write_manifest(path)
+    drop = set(added) | set(removed)
+    entries = [e for e in entries if e["file"] not in drop]
+    for rel in added:
+        entries.extend(_footer_entries(path, rel))
+    return _save_manifest(path, entries)
+
+
+def _manifest_file_matches(
+    path: str,
+    bbox_osm: tuple[int, int, int, int],
+    enlarge: bool = True,
+) -> list[str] | None:
+    """Files whose row-group (cell_zoom, cell_id) stats can intersect the
+    query bbox's cell cover — a conservative superset.  ``None`` when the
+    table has no manifest (fall back to a full-listing scan)."""
+    # a missing, corrupt or truncated manifest degrades to the unpruned
+    # listing
+    entries = _load_manifest(path)
+    if entries is None:
         return None
     from oshdb_spark.grid.xygrid import MAXZOOM, XYGridTree
 
@@ -204,7 +254,7 @@ def _manifest_file_matches(
             covers.append((g.zoom, iv))
     BIG = 1 << 62
     keep: set[str] = set()
-    for e in man["entries"]:
+    for e in entries:
         if e["file"] in keep:
             continue
         zmin = e["zmin"]
@@ -258,21 +308,15 @@ def read_entities_table(
     _require_table(path)
     if as_of_batch is None:
         return spark.read.parquet(path)
-    import glob as _glob
     import os
     import re
 
     keep = []
-    for f in sorted(
-        _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    ):
-        rel_parts = os.path.relpath(f, path).split(os.sep)
-        if any(p.startswith(("_", ".")) for p in rel_parts):
-            continue
-        m = re.match(r"b(\d+)-", os.path.basename(f))
+    for rel in _table_files(path):
+        m = re.match(r"b(\d+)-", os.path.basename(rel))
         if m and int(m.group(1)) > int(as_of_batch):
             continue  # a later snapshot's file
-        keep.append(f)
+        keep.append(os.path.join(path, rel))
     if not keep:
         return spark.read.parquet(path).filter(F.lit(False))
     return spark.read.option("basePath", path).parquet(*keep)

@@ -72,32 +72,37 @@ def _record_commit(store_path: str, batch_id: int) -> None:
     os.replace(tmp, _commits_path(store_path))  # atomic journal update
 
 
-def _promote_batch(store_path: str, staging: str, batch_id: int) -> None:
+def _promote_batch(
+    store_path: str, staging: str, batch_id: int
+) -> tuple[list[str], list[str]]:
     """Move a staged micro-batch's parquet files into the store under
     batch-tagged names (``b<id>-<file>``), deleting any files a previous
     CRASHED attempt of the same batch left behind first.  Replaying the
     batch therefore converges to exactly one copy of its rows no matter
     where the previous attempt died — the property a bare ``append``
-    cannot give (the r4 duplicate-append crash window)."""
+    cannot give (the r4 duplicate-append crash window).  Returns the
+    promoted and the swept files, relative to ``store_path``."""
     import glob as _glob
     import shutil
 
     # sweep partial files from an earlier attempt of THIS batch
+    removed = []
     for stale in _glob.glob(
         os.path.join(store_path, "pt=*", f"b{int(batch_id)}-*.parquet")
     ):
         os.remove(stale)
+        removed.append(os.path.relpath(stale, store_path))
+    added = []
     for f in _glob.glob(os.path.join(staging, "pt=*", "*.parquet")):
-        bucket = os.path.basename(os.path.dirname(f))
-        dest_dir = os.path.join(store_path, bucket)
-        os.makedirs(dest_dir, exist_ok=True)
-        os.replace(
-            f,
-            os.path.join(
-                dest_dir, f"b{int(batch_id)}-{os.path.basename(f)}"
-            ),
+        rel = os.path.join(
+            os.path.basename(os.path.dirname(f)),
+            f"b{int(batch_id)}-{os.path.basename(f)}",
         )
+        os.makedirs(os.path.join(store_path, os.path.dirname(rel)), exist_ok=True)
+        os.replace(f, os.path.join(store_path, rel))
+        added.append(rel)
     shutil.rmtree(staging, ignore_errors=True)
+    return added, removed
 
 
 def incremental_ingest(
@@ -120,10 +125,12 @@ def incremental_ingest(
     batch onto a clean slate, so the store never holds two copies of a
     micro-batch's rows (the standard idempotent-foreachBatch pattern).
     The journal then short-circuits replays of fully committed batches.
-    The manifest is refreshed after every committed batch so file-level
-    pruning covers the new files."""
+    Each batch folds its promoted files into the manifest (and drops the
+    swept ones) so file-level pruning covers the new files; only those
+    files' footers are read, so a stream costs one footer read per file
+    in total, not per batch."""
     from oshdb_spark.sources.entities import extract_entities
-    from oshdb_spark.sources.store import write_entities_table, write_manifest
+    from oshdb_spark.sources.store import update_manifest, write_entities_table
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if int(batch_id) in _committed_batches(store_path):
@@ -138,8 +145,7 @@ def incremental_ingest(
             ents, staging, n_buckets=n_buckets, mode="overwrite",
             manifest=False,
         )
-        _promote_batch(store_path, staging, batch_id)
-        write_manifest(store_path)
+        update_manifest(store_path, *_promote_batch(store_path, staging, batch_id))
         _record_commit(store_path, batch_id)
 
     return (

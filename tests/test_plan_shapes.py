@@ -290,6 +290,28 @@ def test_unfiltered_contribution_job_count(spark, docs_db):
     assert len(jobs) <= 20
 
 
+def _codegen_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_repeated_contribution_reuses_codegen(spark, docs_db):
+    """A repeated query compiles (almost) no codegen class again: the
+    session's codegen cache holds a whole contribution plan, and a
+    stage's class is found whatever number adaptive execution gave the
+    stage.  With Spark's default 100 entries the 235 classes this plan
+    compiled cold evicted each other, and the repeat recompiled 229."""
+    counts = []
+    for _ in range(2):
+        before = _codegen_compiles(spark)
+        _contribution(docs_db).count()
+        counts.append(_codegen_compiles(spark) - before)
+    first, second = counts
+    assert second <= first // 10, counts
+    # a plan outgrowing the cache would thrash it again
+    assert first < int(spark.conf.get("spark.sql.codegen.cache.maxEntries")), counts
+
+
 def test_zonal_and_knn_constant_frames_are_local(spark, docs_db):
     from oshdb_spark.operators.knn import knn_join
 

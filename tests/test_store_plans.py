@@ -130,6 +130,32 @@ def test_corrupt_manifest_degrades_to_full_listing(spark, store_path):
         assert json.load(fh)["entries"]
 
 
+def test_update_manifest_rebuilds_a_corrupt_manifest(store_path):
+    """An append folded into an unreadable manifest rebuilds it in full
+    rather than trusting the remains."""
+    import os
+
+    from oshdb_spark.sources.store import (
+        MANIFEST_NAME,
+        _table_files,
+        update_manifest,
+        write_manifest,
+    )
+
+    mf = os.path.join(store_path, MANIFEST_NAME)
+    with open(mf) as fh:
+        intact = fh.read()
+    try:
+        for garbage in (intact[: len(intact) // 2], '{"entries": [1, 2]}'):
+            with open(mf, "w") as fh:
+                fh.write(garbage)
+            update_manifest(store_path, _table_files(store_path)[:1])
+            with open(mf) as fh:
+                assert fh.read() == intact
+    finally:
+        write_manifest(store_path)
+
+
 def test_etl_leaves_no_persisted_data(spark, docs_parquet, tmp_path):
     """write_entities_table releases what it cached for the write; an
     input the caller cached stays cached."""

@@ -180,6 +180,81 @@ def test_ingest_crash_window_no_duplicates(
     )
 
 
+def test_streaming_manifest_is_incremental(
+    spark, docs_parquet, tmp_path, monkeypatch
+):
+    """Each micro-batch reads the footers of its own files only, and the
+    manifest it keeps equals a full rebuild: after 3 batches, one of them
+    replayed after a crash between the manifest update and the journal
+    record (the replay sweeps the batch's files and promotes them again)."""
+    import json
+
+    import oshdb_spark.sources.store as store_mod
+    import oshdb_spark.streaming as streaming_mod
+    from pyspark.errors import StreamingQueryException
+
+    docs = str(tmp_path / "docs")
+    spark.read.parquet(docs_parquet[0]).repartition(3).write.parquet(docs)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+
+    reads: list[str] = []
+    real_footer = store_mod._footer_entries
+
+    def footer(path, rel):
+        reads.append(rel)
+        return real_footer(path, rel)
+
+    updates: list[tuple[list, list, int]] = []
+    real_update = store_mod.update_manifest
+
+    def update(path, added, removed=()):
+        n = len(reads)
+        out = real_update(path, added, removed)
+        updates.append((list(added), list(removed), len(reads) - n))
+        return out
+
+    real_record = streaming_mod._record_commit
+    crashed = []
+
+    def record(store_path, batch_id):
+        if batch_id == 1 and not crashed:
+            crashed.append(batch_id)
+            raise RuntimeError("crash before journal")
+        return real_record(store_path, batch_id)
+
+    monkeypatch.setattr(store_mod, "_footer_entries", footer)
+    monkeypatch.setattr(store_mod, "update_manifest", update)
+    monkeypatch.setattr(streaming_mod, "_record_commit", record)
+
+    def run():
+        return incremental_ingest(
+            stream_docs(spark, docs, max_files_per_trigger=1), store, ckpt,
+            n_buckets=4,
+        )
+
+    with pytest.raises(StreamingQueryException):
+        run().awaitTermination(120)
+    run().awaitTermination(120)
+
+    assert crashed == [1]
+    # batches 0, 1, the replay of 1, then 2
+    assert len(updates) == 4
+    for added, removed, n_reads in updates:
+        assert added and n_reads == len(added)
+    assert updates[1][1] == [] and sorted(updates[2][1]) == sorted(updates[1][0])
+
+    def manifest():
+        with open(os.path.join(store, store_mod.MANIFEST_NAME)) as fh:
+            return json.load(fh)
+
+    incremental = manifest()
+    store_mod.write_manifest(store)
+    assert incremental == manifest()
+    assert {e["file"] for e in incremental["entries"]} == set(
+        store_mod._table_files(store)
+    )
+
+
 def test_streamed_store_prunes_like_batch(spark, docs_dir, tmp_path):
     """The streamed store supports the same pruned read path."""
     from oshdb_spark.sources.store import read_entities_table, read_pruned
