@@ -164,17 +164,14 @@ class OSHDB:
     (``operators.contribution.contribution_states``: events, squash,
     as-of states and geometry).  Those states read neither the AOI nor
     the interval, so every ``ContributionView`` with the same narrowed
-    type set, OSH-prefilter conjuncts, interpreter and squash/old-style
-    flags reuses one set of state frames and adds only its own
-    classification, clip and interval filter.  That skips thousands of
+    type set and OSH-prefilter conjuncts as the handle's last one reuses
+    its state frames and adds only its own classification, clip and
+    interval filter.  That skips thousands of
     Py4J round trips of plan building per query.  It is safe because
     ``entities`` is fixed when the handle is created (``from_store``
     lists the store's files then), so a memoized frame always plans over
     the same input as a fresh one.
     """
-
-    # distinct contribution-state keys kept per handle, newest first
-    _MEMO_SIZE = 8
 
     def __init__(
         self,
@@ -188,7 +185,7 @@ class OSHDB:
         self.translator = translator or TagTranslator()
         self.interpreter = interpreter
         self.timeout_s: float | None = None
-        self._memo: list[tuple[tuple, object]] = []
+        self._memo: tuple[tuple, object] | None = None
 
     def timeout(self, seconds: float | None) -> "OSHDB":
         """Wall-clock budget for terminal reducers; exceeded -> the query's
@@ -211,15 +208,13 @@ class OSHDB:
         )
 
     def _memoized(self, key: tuple, build: Callable[[], object]):
-        """``build()``'s result, built once per ``key`` on this handle.
-        Keys are compared with ``==`` (filter ``Node``s are unhashable
-        dataclasses); the ``_MEMO_SIZE`` newest keys are kept."""
-        for k, v in self._memo:
-            if k == key:
-                return v
-        v = build()
-        self._memo = [(key, v), *self._memo[: self._MEMO_SIZE - 1]]
-        return v
+        """``build()``'s result for ``key``, kept for the newest key only:
+        the contribution queries of one handle share a key unless their
+        type set or OSH prefilter changes.  Keys are compared with ``==``
+        (filter ``Node``s are unhashable dataclasses)."""
+        if self._memo is None or self._memo[0] != key:
+            self._memo = (key, build())
+        return self._memo[1]
 
     @classmethod
     def from_docs(
@@ -912,13 +907,8 @@ class ContributionView(_MapReducer):
             match = c if match is None else (match & c)
         types = self._type_set()
         # the event states read neither the AOI nor the interval: built
-        # once per handle for everything they do read (the last two key
-        # fields are contribution_states' squash and old-style flags)
-        key = (
-            "contribution_states", types,
-            tuple(c for c, _ in self._prefilter_bounds(alive_nodes)),
-            self.db.interpreter, True, False,
-        )
+        # once per handle for everything else they read
+        key = (types, tuple(c for c, _ in self._prefilter_bounds(alive_nodes)))
         branches = self.db._memoized(key, lambda: contribution_states(
             self._osh_prefilter(self._entities(), alive_nodes),
             interpreter=self.db.interpreter,

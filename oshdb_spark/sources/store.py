@@ -204,19 +204,21 @@ def write_manifest(path: str) -> int:
     )
 
 
-def update_manifest(path: str, added: list[str], removed: list[str] = ()) -> int:
+def update_manifest(path: str, added: list[str]) -> int:
     """Fold an append into the manifest, reading only the footers of the
-    ``added`` files (paths relative to ``path``) and dropping the entries
-    of the ``removed`` ones, so a stream of micro-batches reads each
-    footer once rather than every footer per batch.  A missing or
-    corrupt manifest is rebuilt in full (:func:`write_manifest`).  The
-    result equals a full rebuild over the same files.  Returns the
-    number of entries."""
+    ``added`` files (paths relative to ``path``), so a stream of
+    micro-batches reads each footer once rather than every footer per
+    batch.  Entries of files no longer in the table are dropped by a
+    directory listing (no footer reads): a replayed batch's sweep may
+    delete files of any earlier attempt, including attempts whose own
+    update never ran.  A missing or corrupt manifest is rebuilt in full
+    (:func:`write_manifest`).  The result equals a full rebuild over
+    the same files.  Returns the number of entries."""
     entries = _load_manifest(path)
     if entries is None:
         return write_manifest(path)
-    drop = set(added) | set(removed)
-    entries = [e for e in entries if e["file"] not in drop]
+    keep = set(_table_files(path)) - set(added)
+    entries = [e for e in entries if e["file"] in keep]
     for rel in added:
         entries.extend(_footer_entries(path, rel))
     return _save_manifest(path, entries)

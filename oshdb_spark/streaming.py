@@ -72,26 +72,22 @@ def _record_commit(store_path: str, batch_id: int) -> None:
     os.replace(tmp, _commits_path(store_path))  # atomic journal update
 
 
-def _promote_batch(
-    store_path: str, staging: str, batch_id: int
-) -> tuple[list[str], list[str]]:
+def _promote_batch(store_path: str, staging: str, batch_id: int) -> list[str]:
     """Move a staged micro-batch's parquet files into the store under
     batch-tagged names (``b<id>-<file>``), deleting any files a previous
     CRASHED attempt of the same batch left behind first.  Replaying the
     batch therefore converges to exactly one copy of its rows no matter
     where the previous attempt died — the property a bare ``append``
     cannot give (the r4 duplicate-append crash window).  Returns the
-    promoted and the swept files, relative to ``store_path``."""
+    promoted files, relative to ``store_path``."""
     import glob as _glob
     import shutil
 
     # sweep partial files from an earlier attempt of THIS batch
-    removed = []
     for stale in _glob.glob(
         os.path.join(store_path, "pt=*", f"b{int(batch_id)}-*.parquet")
     ):
         os.remove(stale)
-        removed.append(os.path.relpath(stale, store_path))
     added = []
     for f in _glob.glob(os.path.join(staging, "pt=*", "*.parquet")):
         rel = os.path.join(
@@ -102,7 +98,7 @@ def _promote_batch(
         os.replace(f, os.path.join(store_path, rel))
         added.append(rel)
     shutil.rmtree(staging, ignore_errors=True)
-    return added, removed
+    return added
 
 
 def incremental_ingest(
@@ -126,7 +122,8 @@ def incremental_ingest(
     micro-batch's rows (the standard idempotent-foreachBatch pattern).
     The journal then short-circuits replays of fully committed batches.
     Each batch folds its promoted files into the manifest (and drops the
-    swept ones) so file-level pruning covers the new files; only those
+    entries of files no longer in the store, such as those its replay
+    swept) so file-level pruning covers the new files; only those
     files' footers are read, so a stream costs one footer read per file
     in total, not per batch."""
     from oshdb_spark.sources.entities import extract_entities
@@ -145,7 +142,7 @@ def incremental_ingest(
             ents, staging, n_buckets=n_buckets, mode="overwrite",
             manifest=False,
         )
-        update_manifest(store_path, *_promote_batch(store_path, staging, batch_id))
+        update_manifest(store_path, _promote_batch(store_path, staging, batch_id))
         _record_commit(store_path, batch_id)
 
     return (

@@ -204,13 +204,13 @@ def test_streaming_manifest_is_incremental(
         reads.append(rel)
         return real_footer(path, rel)
 
-    updates: list[tuple[list, list, int]] = []
+    updates: list[tuple[list, int]] = []
     real_update = store_mod.update_manifest
 
-    def update(path, added, removed=()):
+    def update(path, added):
         n = len(reads)
-        out = real_update(path, added, removed)
-        updates.append((list(added), list(removed), len(reads) - n))
+        out = real_update(path, added)
+        updates.append((list(added), len(reads) - n))
         return out
 
     real_record = streaming_mod._record_commit
@@ -239,9 +239,8 @@ def test_streaming_manifest_is_incremental(
     assert crashed == [1]
     # batches 0, 1, the replay of 1, then 2
     assert len(updates) == 4
-    for added, removed, n_reads in updates:
+    for added, n_reads in updates:
         assert added and n_reads == len(added)
-    assert updates[1][1] == [] and sorted(updates[2][1]) == sorted(updates[1][0])
 
     def manifest():
         with open(os.path.join(store, store_mod.MANIFEST_NAME)) as fh:
@@ -253,6 +252,75 @@ def test_streaming_manifest_is_incremental(
     assert {e["file"] for e in incremental["entries"]} == set(
         store_mod._table_files(store)
     )
+
+
+def test_streaming_manifest_survives_two_crashes_of_one_batch(
+    spark, docs_parquet, tmp_path, monkeypatch
+):
+    """Attempt 1 of a batch promotes its files and updates the manifest,
+    then dies before the journal record; attempt 2 sweeps those files,
+    then dies mid-promote before its manifest update; attempt 3 sweeps
+    nothing of attempt 1 (Spark names part files per write job).  The
+    manifest must still name only files in the store, and the pruned
+    read must plan over existing files."""
+    import json
+
+    import oshdb_spark.sources.store as store_mod
+    import oshdb_spark.streaming as streaming_mod
+    from pyspark.errors import StreamingQueryException
+
+    docs = str(tmp_path / "docs")
+    spark.read.parquet(docs_parquet[0]).repartition(3).write.parquet(docs)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+
+    attempts = []
+    real_promote = streaming_mod._promote_batch
+    real_record = streaming_mod._record_commit
+    real_replace = os.replace
+
+    def promote(store_path, staging, batch_id):
+        if batch_id == 1:
+            attempts.append(batch_id)
+        return real_promote(store_path, staging, batch_id)
+
+    def record(store_path, batch_id):
+        if batch_id == 1 and len(attempts) == 1:
+            raise RuntimeError("crash before journal")
+        return real_record(store_path, batch_id)
+
+    def replace(src, dst):
+        # the first move of attempt 2, after its sweep: a torn promote
+        if len(attempts) == 2 and os.path.basename(dst).startswith("b1-"):
+            raise RuntimeError("crash mid promote")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(streaming_mod, "_promote_batch", promote)
+    monkeypatch.setattr(streaming_mod, "_record_commit", record)
+    monkeypatch.setattr(os, "replace", replace)
+
+    def run():
+        return incremental_ingest(
+            stream_docs(spark, docs, max_files_per_trigger=1), store, ckpt,
+            n_buckets=4,
+        )
+
+    for _ in range(2):
+        with pytest.raises(StreamingQueryException):
+            run().awaitTermination(120)
+    run().awaitTermination(120)
+    assert len(attempts) == 3
+
+    def manifest():
+        with open(os.path.join(store, store_mod.MANIFEST_NAME)) as fh:
+            return json.load(fh)
+
+    world = (-1_800_000_000, -900_000_000, 1_800_000_000, 900_000_000)
+    got = store_mod.read_pruned(spark, store, world)
+    want = store_mod.read_pruned(spark, store, world, use_manifest=False)
+    assert got.count() == want.count() > 0
+    incremental = manifest()
+    store_mod.write_manifest(store)
+    assert incremental == manifest()
 
 
 def test_streamed_store_prunes_like_batch(spark, docs_dir, tmp_path):
