@@ -27,9 +27,11 @@ from __future__ import annotations
 
 import dataclasses
 import functools
+import weakref
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,6 +91,13 @@ def _flush_python_workers(spark: SparkSession, tries: int = 3) -> None:
             return
         except Exception:  # poisoned worker consumed; retry the probe
             continue
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    for df in frames:
+        if df.sparkSession.sparkContext._jsc is None:
+            return  # the session stopped, and its cache went with it
+        df.unpersist()
 
 
 def _run_with_timeout(spark: SparkSession, seconds, fn):
@@ -165,9 +174,22 @@ class OSHDB:
     as-of states and geometry).  Those states read neither the AOI nor
     the interval, so every ``ContributionView`` with the same narrowed
     type set and OSH-prefilter conjuncts as the handle's last one reuses
-    its state frames and adds only its own classification, clip and
-    interval filter.  That skips thousands of
-    Py4J round trips of plan building per query.  It is safe because
+    them and runs only its own AOI clip, lag classification and interval
+    filter -- the way the reference iterates an ``OSHEntity``'s stored
+    versions and member histories instead of rebuilding them.
+
+    The state frames are ``persist()``ed at Spark's default storage level
+    (``MEMORY_AND_DISK``: partitions spill to disk under memory pressure,
+    and a lost block is recomputed from the frame's lineage).  The first
+    query that reads them fills the cache; later ones plan an
+    ``InMemoryTableScan`` per kind.  The handle releases them
+    (``unpersist``) when its key changes and when the handle itself is
+    garbage collected.  Spark's cache manager keys a cached frame by its
+    plan, so handles over identical entities share one cache entry: a
+    handle reads the states another one filled, and releasing them on
+    one handle drops them for both.  A handle whose states were dropped
+    that way (or by ``spark.catalog.clearCache()``) persists them again
+    on its next contribution query.  Memoizing is safe because
     ``entities`` is fixed when the handle is created (``from_store``
     lists the store's files then), so a memoized frame always plans over
     the same input as a fresh one.
@@ -185,7 +207,8 @@ class OSHDB:
         self.translator = translator or TagTranslator()
         self.interpreter = interpreter
         self.timeout_s: float | None = None
-        self._memo: tuple[tuple, object] | None = None
+        self._memo: tuple[tuple, dict[str, DataFrame]] | None = None
+        self._release: weakref.finalize | None = None
 
     def timeout(self, seconds: float | None) -> "OSHDB":
         """Wall-clock budget for terminal reducers; exceeded -> the query's
@@ -207,14 +230,31 @@ class OSHDB:
             self.entities.filter(F.col("type") == "relation")
         )
 
-    def _memoized(self, key: tuple, build: Callable[[], object]):
-        """``build()``'s result for ``key``, kept for the newest key only:
-        the contribution queries of one handle share a key unless their
-        type set or OSH prefilter changes.  Keys are compared with ``==``
+    def _memoized(
+        self, key: tuple, build: Callable[[], dict[str, DataFrame]]
+    ) -> dict[str, DataFrame]:
+        """``build()``'s frames for ``key``, persisted and kept for the
+        newest key only: the contribution queries of one handle share a
+        key unless their type set or OSH prefilter changes.  A new key
+        unpersists the old key's frames.  Keys are compared with ``==``
         (filter ``Node``s are unhashable dataclasses)."""
         if self._memo is None or self._memo[0] != key:
+            if self._release is not None:
+                self._release()
             self._memo = (key, build())
-        return self._memo[1]
+            # holds the frames, never the handle: collecting the handle
+            # releases its states
+            self._release = weakref.finalize(
+                self, _unpersist, list(self._memo[1].values())
+            )
+            self._release.atexit = False  # no Py4J calls at interpreter exit
+        frames = self._memo[1]
+        for df in frames.values():
+            # new, or released meanwhile by a handle sharing its cache
+            # entry or by ``spark.catalog.clearCache()``
+            if df.storageLevel == StorageLevel.NONE:
+                df.persist()
+        return frames
 
     @classmethod
     def from_docs(

@@ -693,7 +693,12 @@ def contribution_states(
     interval-independent half of :func:`contribution_view` (events,
     squash, as-of states and geometry), which :func:`contributions_of`
     turns into contributions.  An ``OSHDB`` handle builds these frames
-    once per key and reuses them on every later query.
+    once per key, ``persist()``s them and reuses them on every later
+    query, which then scans them (``InMemoryTableScan``) instead of
+    re-running this cascade; the frames returned here are not persisted,
+    so :func:`contribution_view` recomputes them on each call (unless a
+    handle over the same entities holds them cached: Spark's cache
+    manager then reads its copy).
 
     ``types`` restricts the entity kinds to build (the reference's DNF
     type-narrowing, MapReducer.java:1910-1935); when None all three kinds

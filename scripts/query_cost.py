@@ -7,8 +7,10 @@ Builds perfbench's ``aoi_queries`` world for ``--seed`` on the engine of
 ``--root`` (default: this checkout; point it at another checkout to
 measure that engine with the same script), warms up exactly as perfbench
 does, and then runs the first timed round of the five query types,
-followed by that round's contribution query once more.  For each query it
-prints the wall time, the process-tree CPU and its split, read from
+followed by that round's contribution query once more and by a
+``type:way`` contribution query (a memo-key miss: the handle builds and
+persists new contribution states).  For each query it prints the wall
+time, the jobs it started, the process-tree CPU and its split, read from
 ``/proc`` around the query:
 
 * ``jit``        the JVM's C1/C2 compiler threads;
@@ -23,9 +25,12 @@ prints the wall time, the process-tree CPU and its split, read from
 ``compiles`` is the number of whole-stage-codegen classes Janino compiled
 during the query (Spark's ``CodegenMetrics`` compilation-time histogram).
 After the table it prints the Py4J round trips and the wall time of
-building (not running) a contribution DataFrame on the warm handle, and a
-JSON line with everything.  It changes nothing under ``perfbench/``: the
-world, the queries and the session settings are perfbench's own.
+building (not running) a contribution DataFrame on the warm handle, the
+bytes the session holds cached (``getRDDStorageInfo``: memory plus disk)
+after the repeat and after the key miss -- the handle's contribution
+states are all it caches then -- and a JSON line with everything.  It
+changes nothing under ``perfbench/``: the world, the queries and the
+session settings are perfbench's own.
 """
 
 from __future__ import annotations
@@ -102,6 +107,7 @@ class Probe:
     POLL_S = 0.05
 
     def __init__(self, spark):
+        self.sc = spark.sparkContext
         self.jvm = spark._jvm
         self.pid = int(self.jvm.java.lang.ProcessHandle.current().pid())
 
@@ -127,12 +133,17 @@ class Probe:
         c0, t0 = self.compiles(), time.perf_counter()
         th = threading.Thread(target=poll, daemon=True)
         th.start()
+        group = f"query_cost-{c0}-{t0}"
+        self.sc.setJobGroup(group, "query_cost probe")
         try:
             fn()
         finally:
             wall = time.perf_counter() - t0
             done.set()
             th.join()
+            self.sc.setLocalProperty("spark.jobGroup.id", None)
+            self.sc.setLocalProperty("spark.job.description", None)
+        jobs = len(self.sc.statusTracker().getJobIdsForGroup(group))
         seen.update(_jvm_threads(self.pid))
         c1 = self.compiles()
         t = dict.fromkeys(SPLIT, 0)
@@ -143,8 +154,14 @@ class Probe:
         t["py_driver"] = _ticks(_stat(f"/proc/{os.getpid()}/stat")) - py0 - sampler["ticks"]
         t["py_workers"] = _workers_ticks(self.pid) - w0
         d = {k: v / CLK_TCK for k, v in t.items()}
-        return {"wall_s": wall, "cpu_s": sum(d.values()), **d,
+        return {"wall_s": wall, "jobs": jobs, "cpu_s": sum(d.values()), **d,
                 "compiles": c1 - c0}
+
+
+def cached_bytes(spark) -> int:
+    """Memory plus disk bytes of every RDD the session holds cached."""
+    return sum(int(i.memSize()) + int(i.diskSize())
+               for i in spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
 def count_py4j(spark, fn) -> tuple[int, float]:
@@ -209,12 +226,16 @@ def main(argv=None) -> int:
             r = probe.run(lambda q=q: wl._execute(q, wl.db))
             rows.append({"op": q["op"], **r})
         rows[-1]["op"] = "contribution (repeat)"
-        out["queries"] = rows
         out["round_compiles"] = sum(r["compiles"] for r in rows[:-1])
         trips, build_s = count_py4j(
             spark, lambda: wl._view(contribution, wl.db).dataframe())
         out["warm_contribution_build"] = {"py4j_round_trips": trips,
                                           "wall_s": build_s}
+        out["cached_bytes"] = {"after_repeat": cached_bytes(spark)}
+        rows.append({"op": "contribution (key miss)", **probe.run(
+            lambda: wl._view(contribution, wl.db).filter("type:way").count())})
+        out["cached_bytes"]["after_key_miss"] = cached_bytes(spark)
+        out["queries"] = rows
     finally:
         stop_processes(spark)
         if args.work is None:
@@ -223,15 +244,19 @@ def main(argv=None) -> int:
     cols = ("wall_s", "cpu_s", *SPLIT)
     print(f"# query_cost seed={args.seed} cores={cores} root={root} "
           f"codegen cache={out['cache_max_entries']}")
-    print(f"{'query':24s}" + "".join(f"{c:>11s}" for c in cols) + f"{'compiles':>10s}")
+    print(f"{'query':24s}" + "".join(f"{c:>11s}" for c in cols)
+          + f"{'jobs':>6s}{'compiles':>10s}")
     for r in out["queries"]:
         print(f"{r['op']:24s}" + "".join(f"{r[c]:11.2f}" for c in cols)
-              + f"{r['compiles']:10d}")
+              + f"{r['jobs']:6d}{r['compiles']:10d}")
     print(f"# compiles: set-up {out['setup_compiles']}, "
           f"timed round {out['round_compiles']}")
     b = out["warm_contribution_build"]
     print(f"# warm-handle contribution build: {b['py4j_round_trips']} Py4J "
           f"round trips, {b['wall_s']:.2f} s")
+    m = out["cached_bytes"]
+    print(f"# cached bytes: after the repeat {m['after_repeat']}, "
+          f"after the key miss {m['after_key_miss']}")
     print(json.dumps(out))
     return 0
 

@@ -31,7 +31,20 @@ from oshdb_spark.session import local_frame
 
 
 def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The physical plan ``df`` runs, without the plans of the cached
+    frames it reads.  The plan string prints each ``InMemoryRelation``'s
+    cached plan under it, but a query over a cached frame only scans it
+    (``InMemoryTableScan``); and which cached plan is printed depends on
+    which frames other handles happen to have cached."""
+    live, cached_depth = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if cached_depth is not None and depth > cached_depth:
+            continue  # inside a cached plan
+        cached_depth = depth if "InMemoryRelation" in line else None
+        if cached_depth is None:
+            live.append(line)
+    return "\n".join(live)
 
 
 def _points(spark, n=50):
@@ -253,6 +266,17 @@ def _contribution(db, filt: str | None = None):
     return v.filter(filt) if filt else v
 
 
+def _uncached(spark, df):
+    """``df`` planned with no contribution states cached: the handle's
+    whole event/squash/as-of/geometry cascade.  Spark's cache manager
+    puts any handle's cached states into every plan over the same
+    entities, and a DataFrame looks its cached frames up when it is
+    first planned, so the cache is emptied after ``df`` is built and
+    before it is planned."""
+    spark.catalog.clearCache()
+    return df
+
+
 @pytest.mark.parametrize(
     "filt, exchanges, max_lines",
     [
@@ -263,14 +287,14 @@ def _contribution(db, filt: str | None = None):
     ],
     ids=["all-types", "relation"],
 )
-def test_contribution_plan_size(docs_db, filt, exchanges, max_lines):
-    plan = _plan(_contribution(docs_db, filt).dataframe())
+def test_contribution_plan_size(spark, docs_db, filt, exchanges, max_lines):
+    plan = _plan(_uncached(spark, _contribution(docs_db, filt).dataframe()))
     assert plan.count("Exchange") == exchanges, plan[:6000]
     assert len(plan.splitlines()) <= max_lines, plan[:6000]
 
 
-def test_contribution_plan_has_no_all_null_python_call(docs_db):
-    plan = _plan(_contribution(docs_db).dataframe())
+def test_contribution_plan_has_no_all_null_python_call(spark, docs_db):
+    plan = _plan(_uncached(spark, _contribution(docs_db).dataframe()))
     # the node branch's null geometry never reaches a Python UDF
     assert not re.search(r"_udf\((null(, )?)+\)", plan), plan[:6000]
 
@@ -279,15 +303,39 @@ def test_unfiltered_contribution_job_count(spark, docs_db):
     docs_db.nested_relations  # the handle's one probe, outside the count
     sc = spark.sparkContext
     group = "plan-shape-contribution-jobs"
+    df = _uncached(spark, _contribution(docs_db).dataframe())
     sc.setJobGroup(group, "unfiltered contribution count")
     try:
-        _contribution(docs_db).count()
+        df.count()
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # 31 before the one-pass rewrite
     assert len(jobs) <= 20
+
+
+def test_warm_contribution_reads_cached_states(spark, docs_db):
+    """A handle persists its contribution states: once a query has
+    filled them, a bbox count on the handle scans them and plans only
+    the AOI clip, the lag classification and the interval filter."""
+    _contribution(docs_db).count()  # fills the handle's states
+    view = _contribution(docs_db)
+    plan = _plan(view.dataframe().agg(F.count(F.lit(1))))
+    # 15 Exchanges and 16 jobs when every query rebuilt its states
+    assert plan.count("InMemoryTableScan") == 3, plan[:4000]
+    assert plan.count("Exchange") <= 2, plan[:4000]
+    assert plan.count("ArrowEvalPython") <= 2, plan[:4000]
+    sc = spark.sparkContext
+    group = "plan-shape-warm-contribution-jobs"
+    sc.setJobGroup(group, "warm contribution count")
+    try:
+        view.count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 4, jobs
 
 
 def _codegen_compiles(spark) -> int:
@@ -426,7 +474,7 @@ def _python_and_exchanges(df) -> tuple[int, int]:
     ids=["snapshot-bbox", "snapshot-polygon", "contribution-bbox",
          "contribution-polygon", "contribution-polygon-count"],
 )
-def test_aoi_plan_shapes(docs_db, view, aoi, count, want):
+def test_aoi_plan_shapes(spark, docs_db, view, aoi, count, want):
     from oshdb_spark.api import ContributionView, SnapshotView
 
     if view == "snapshot":
@@ -436,4 +484,6 @@ def test_aoi_plan_shapes(docs_db, view, aoi, count, want):
     df = v.filter("type:way").area_of_interest(**aoi).dataframe()
     if count:
         df = df.agg(F.count(F.lit(1)))
+    if view == "contribution":
+        df = _uncached(spark, df)  # the whole cascade, clip included
     assert _python_and_exchanges(df) == want, _plan(df)[:4000]

@@ -1,6 +1,8 @@
 """Storage layout + physical-plan shape tests: the judge-facing evidence
 that predicates push down, small sides broadcast, and scans prune."""
 
+import gc
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,6 +165,9 @@ def test_etl_leaves_no_persisted_data(spark, docs_parquet, tmp_path):
     # a plan no other test caches, so the ETL's own cache is a new entry
     ents = extract_entities(spark.read.parquet(path)).filter("id % 3 <> 1")
     jsc = spark.sparkContext._jsc
+    # an OSHDB handle of an earlier test unpersists its contribution
+    # states when it is collected: not between the two counts
+    gc.collect()
     before = jsc.getPersistentRDDs().size()
     write_entities_table(ents, str(tmp_path / "etl"), n_buckets=4)
     assert jsc.getPersistentRDDs().size() == before
